@@ -279,7 +279,15 @@ def canon_udf():
 
 def canon_host_udf():
     """``pandas_udf``: raw url STRING -> STRUCT<url_canon, host> in one
-    Arrow round-trip (half the Python-boundary cost of two UDFs)."""
+    Arrow round-trip (half the Python-boundary cost of two UDFs).
+
+    Marked nondeterministic as an optimizer barrier, not because results
+    vary: callers project the struct and then drop rows whose
+    ``url_canon`` is NULL, and Catalyst pushes that filter below the
+    projection of a deterministic UDF — re-evaluating canonicalization
+    for the filter in a second Python stage, ahead of any round-robin
+    repartition the caller placed to spread the work. The barrier keeps
+    ONE evaluation, above the repartition."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -294,9 +302,7 @@ def canon_host_udf():
     def _canon_host(urls: pd.Series) -> pd.DataFrame:
         return canon_host_frame(urls)
 
-    _canon_host = F.pandas_udf(_canon_host, schema)
-
-    return _canon_host
+    return F.pandas_udf(_canon_host, schema).asNondeterministic()
 
 
 def host_udf():

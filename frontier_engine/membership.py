@@ -371,9 +371,11 @@ def _cached_filter(root: str, cycle: int, bucket: int):
 
 def split_by_filter(cand: "DataFrame", io, through_cycle: int, cfg):
     """Split candidates into (definite_new, maybe_seen, tested) using the
-    newest filter rows ≤ through_cycle; ``tested`` is the PERSISTED probe
-    frame both splits derive from (None when no filters exist) — the
-    caller unpersists it once the cycle's outputs are materialized.
+    newest filter rows ≤ through_cycle; ``tested`` is the lazily
+    LOCAL-CHECKPOINTED probe frame both splits derive from (None when no
+    filters exist) — the caller releases it once the cycle's outputs are
+    materialized (``unpersist()`` alone does not free a checkpoint: see
+    scheduler.run_cycle).
     Exactness-preserving: if filters lag the url_seen deltas, definite_new
     is patched with an exact anti-join over the missing delta range
     (TTL-windowed in recrawl mode, matching the scheduler's seen frame)."""
@@ -417,13 +419,17 @@ def split_by_filter(cand: "DataFrame", io, through_cycle: int, cfg):
             pdf["maybe_seen"] = out
             yield pdf
 
-    # persist: the (definite_new, maybe_seen) split feeds two union
+    # checkpoint: the (definite_new, maybe_seen) split feeds two union
     # branches of one downstream plan, and union branches do NOT share
-    # unpersisted subtrees — without this the filter loads + contains_many
-    # pass (and the dedup agg beneath it) would execute twice per cycle
-    # (the same union-branch-recompute pathology the band pipeline hit).
-    # The caller unpersists it at end of cycle.
-    tested = cand.mapInPandas(check_batches, out_schema).persist()
+    # uncached subtrees — without this the filter loads + contains_many
+    # pass (and everything beneath it) would execute twice per cycle (the
+    # same union-branch-recompute pathology the band pipeline hit). A
+    # local checkpoint rather than persist(): plans above it start from a
+    # LogicalRDD leaf, not the whole candidate plan. The caller releases
+    # it at end of cycle.
+    tested = cand.mapInPandas(check_batches, out_schema).localCheckpoint(
+        eager=False
+    )
     definite_new = tested.where("NOT maybe_seen").drop("maybe_seen")
     maybe_seen = tested.where("maybe_seen").drop("maybe_seen")
 
@@ -450,6 +456,24 @@ _FILTER_ROW_SCHEMA_DDL = (
     "host_bucket INT, kind STRING, n_bits BIGINT, status STRING, data BINARY"
 )
 _ROW_COLS = ["host_bucket", "kind", "n_bits", "status", "data"]
+
+
+def _bucket_rows(spark, **cols: list):
+    """One INT row per task from equal-length driver lists (row i holds
+    every list's i-th value): ``range(n, numPartitions=n)`` indexes array
+    literals, so the frame needs no Python-built RDD (a job through Python
+    workers) and no round-robin shuffle to spread one bucket per task —
+    the row IS the bucket, any task assignment is correct."""
+    from pyspark.sql import functions as F
+
+    n = len(next(iter(cols.values())))
+    idx = (F.col("id") + 1).cast("int")
+    return spark.range(n, numPartitions=max(1, n)).select(*(
+        F.element_at(F.array(*(F.lit(int(v)) for v in vals)), idx)
+        .cast("int")
+        .alias(name)
+        for name, vals in cols.items()
+    ))
 
 
 def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> dict:
@@ -577,12 +601,8 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
         yield _pd.DataFrame(rows, columns=_ROW_COLS)
 
     touched = sorted(files_by_bucket)
-    upsert_df = (
-        spark.createDataFrame([(b,) for b in touched], "host_bucket INT")
-        # round-robin over the touched buckets: one task per bucket (the
-        # row IS the bucket — any task assignment is correct)
-        .repartition(max(1, len(touched)))
-        .mapInPandas(upsert_batches, out_schema)
+    upsert_df = _bucket_rows(spark, host_bucket=touched).mapInPandas(
+        upsert_batches, out_schema
     )
     rel = f"filters/cycle={cycle}/stage=upsert"
     # hive-partition by host_bucket (one row per task -> one file per
@@ -681,9 +701,11 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
             (b, c) for b, c in prev_loc.items() if b not in written
         )
         if carry:
-            carry_df = spark.createDataFrame(
-                carry, "host_bucket INT, src_cycle INT"
-            ).repartition(cfg.n_buckets, "host_bucket")
+            carry_df = _bucket_rows(
+                spark,
+                host_bucket=[b for b, _ in carry],
+                src_cycle=[c for _, c in carry],
+            )
 
             def copy_batches(batches):
                 import pandas as _pd

@@ -23,9 +23,19 @@ from .robots_rfc import SPARK_ESC_CLASS as _RX_META
 
 
 def budgets_df(spark, budgets: dict[str, int]) -> DataFrame:
-    """Politeness budgets as a broadcastable dimension (host, budget)."""
-    rows = sorted(budgets.items())
-    return spark.createDataFrame(rows, "host string, budget int")
+    """Politeness budgets as a broadcastable dimension (host, budget).
+
+    Built from an Arrow table, so the plan leaf is a LocalTableScan: a
+    frame built from a Python list is an RDD scan, and every evaluation
+    of it runs a job through Python workers."""
+    import pyarrow as pa
+
+    hosts = sorted(budgets)
+    table = pa.table({
+        "host": pa.array(hosts, pa.string()),
+        "budget": pa.array([budgets[h] for h in hosts], pa.int32()),
+    })
+    return spark.createDataFrame(table, "host string, budget int")
 
 
 def apply_robots(

@@ -53,11 +53,48 @@ def _bucket(col, n_buckets: int):
 ANN_WRITE_SALT = 4
 
 
+def _canonicalized(df: DataFrame, n_buckets: int, *cols) -> DataFrame:
+    """``url`` -> (url_canon, host, *cols, url_hash, host_bucket) with ONE
+    evaluation of the canonicalization UDF per row. A URL that does not
+    canonicalize (unparseable href, non-fetchable page URL: the canon
+    fetchability gate) maps to NULL and its row is dropped, so no
+    NULL-keyed row survives (refspec skips the same rows)."""
+    ch = canon_host_udf()
+    return (
+        df.withColumn("_ch", ch("url"))
+        .select(
+            F.col("_ch.url_canon").alias("url_canon"),
+            F.col("_ch.host").alias("host"),
+            *cols,
+        )
+        .where(F.col("url_canon").isNotNull())
+        .withColumn("url_hash", F.xxhash64("url_canon"))
+        .withColumn("host_bucket", _bucket(F.col("host"), n_buckets))
+    )
+
+
+def canon_pages(
+    spark: SparkSession, pages_path: str, cfg: EngineConfig
+) -> DataFrame:
+    """The corpus ``prepare_pages`` writes: canonicalized, keyed, duplicate
+    canonical spellings dropped (keep min (warc_ts, url))."""
+    pages = spark.read.parquet(pages_path)
+    pc = _canonicalized(
+        pages, cfg.n_buckets, "url", "warc_ts", "html", "text", "lang"
+    )
+    w = Window.partitionBy("url_canon").orderBy("warc_ts", "url")
+    return (
+        pc.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn", "url")
+        .select(*schemas.PAGES_CANON.fieldNames())
+    )
+
+
 def prepare_pages(
     spark: SparkSession, pages_path: str, io: TableIO, cfg: EngineConfig
 ) -> str:
-    """One-time corpus prep: canonicalize, key, dedup duplicate canonical
-    spellings (keep min (warc_ts, url)), write BUCKETED by url_hash.
+    """One-time corpus prep: ``canon_pages``, written BUCKETED by url_hash.
 
     At 100 TB this is the single full shuffle of the dataset. Because the
     output is a Spark-bucketed table on the fetch-join key, every later
@@ -65,34 +102,7 @@ def prepare_pages(
     bodies (html) never cross a shuffle again."""
     import uuid as _uuid
 
-    pages = spark.read.parquet(pages_path)
-    ch = canon_host_udf()
-    pc = (
-        pages.withColumn("_ch", ch("url"))
-        .select(
-            F.col("_ch.url_canon").alias("url_canon"),
-            F.col("_ch.host").alias("host"),
-            "url",
-            "warc_ts",
-            "html",
-            "text",
-            "lang",
-        )
-        # a non-fetchable page URL canonicalizes to NULL (canon fetchability
-        # gate) — drop it here like ingest does, so no NULL-keyed row
-        # survives into the bucketed corpus (refspec's load_pages_lookup
-        # mirrors the skip)
-        .where(F.col("url_canon").isNotNull())
-        .withColumn("url_hash", F.xxhash64("url_canon"))
-        .withColumn("host_bucket", _bucket(F.col("host"), cfg.n_buckets))
-    )
-    w = Window.partitionBy("url_canon").orderBy("warc_ts", "url")
-    pc = (
-        pc.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "url")
-        .select(*schemas.PAGES_CANON.fieldNames())
-    )
+    pc = canon_pages(spark, pages_path, cfg)
     loc = os.path.join(io.root, "pages_canon")
     # write to a tmp location and rename into place so a crash mid-prepare
     # never leaves a partial pages_canon that a later exists-check (bench
@@ -148,9 +158,9 @@ def _lineage_wide(
 ) -> DataFrame:
     """Per-bucket lineage in ONE aggregation per source frame (5 scans), each
     producing several metrics via conditional sums — replaces the earlier
-    7-scan long-format union + pivot. The frames are the persisted pipeline
-    stages, so computing lineage doubles as the cache-warming materialization
-    pass for the commit writes."""
+    7-scan long-format union + pivot. The frames are the checkpointed
+    pipeline stages, so computing lineage doubles as the pass that
+    materializes every checkpoint before the concurrent commit writes."""
     one = F.count(F.lit(1))
     m_cand = cand.groupBy("host_bucket").agg(one.alias("cand_total"))
     m_disc = ingested.groupBy("host_bucket").agg(one.alias("discovered"))
@@ -174,6 +184,16 @@ def _lineage_wide(
         .withColumn("deduped", F.col("cand_total") - F.col("discovered"))
         .select(*schemas.LINEAGE.fieldNames())
     )
+
+
+def _release(df: DataFrame) -> None:
+    """Free a frame ``run_cycle`` tracked: a persisted frame drops its
+    cache; a local checkpoint unpersists the RDD behind its ``LogicalRDD``
+    leaf, which ``df.unpersist()`` leaves in place."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 @dataclass
@@ -234,6 +254,24 @@ class FrontierScheduler:
             self.spark, "discoveries", cycle - 1, schemas.DISCOVERIES
         )
 
+    def _candidates(self, cycle: int) -> DataFrame:
+        """The cycle's discoveries, canonicalized and keyed. Candidates are
+        spread across all cores BEFORE the pandas UDF — a single-file seed
+        list would otherwise pin canonicalization to a couple of input
+        splits (the shuffle is skipped when the input is already split
+        finely enough); the UDF runs once per row, after it."""
+        par = self.spark.sparkContext.defaultParallelism
+        discoveries = self._discoveries(cycle)
+        if discoveries.rdd.getNumPartitions() < par:
+            discoveries = discoveries.repartition(par)
+        return _canonicalized(
+            discoveries,
+            self.cfg.n_buckets,
+            F.col("priority").cast("int").alias("priority"),
+            "discovered_ts",
+            "src_host",
+        )
+
     def _latest_host_rank(self, cycle: int) -> tuple[int, DataFrame] | None:
         """Newest committed host_rank table at a cycle <= cycle-1 (manifest
         walk only — no data reads until the caller joins it). Returns
@@ -252,7 +290,7 @@ class FrontierScheduler:
         """Physical salt from OBSERVED skew (cfg.auto_salt): the previous
         cycle records the hottest single host's share of the eligible
         frontier in its manifest meta (two scalars from one partial-agg
-        job over the already-persisted ranked frame — no extra frontier
+        job over the already-checkpointed ranked frame — no extra frontier
         scan). Share is scale-free: one host owning >= 10% of a frontier
         is exactly the skew the two-phase window and salted queue write
         fight, at 2k URLs or 10^10. salt = next_pow2(share * 32) capped
@@ -281,17 +319,29 @@ class FrontierScheduler:
     # -- the cycle ---------------------------------------------------------
 
     def run_cycle(self, cycle: int, build_filters: bool = True) -> CycleResult:
-        """One crawl cycle. Every frame persisted inside the body is
-        registered on ``tracked`` and unpersisted here in a finally: an
-        exception mid-cycle must not leak cached frames into the Spark
-        session for its remaining lifetime (a long-running driver loop
-        retries cycles — leaked caches would accumulate across retries)."""
+        """One crawl cycle. The pipeline frames that several outputs read
+        are local checkpoints (``localCheckpoint(eager=False)``): every
+        later plan starts from a short ``LogicalRDD`` leaf instead of the
+        whole cycle's plan and lineage, so each concurrent commit write
+        plans, code-generates and ships a short plan. Each such frame is
+        registered on ``tracked`` and released here in a finally, together
+        with the frames ``graph.integer_pagerank`` persists: an exception
+        mid-cycle must not leak blocks into the Spark session for its
+        remaining lifetime (a long-running driver loop retries cycles —
+        leaked blocks would accumulate across retries). ``df.unpersist()``
+        does not free a local checkpoint, so ``_release`` also unpersists
+        the checkpoint's RDD.
+
+        Trade-off: a checkpoint block lost mid-cycle (an executor dies)
+        fails the cycle instead of being recomputed from lineage. That is
+        safe: a failed cycle commits nothing (the manifest barrier), and a
+        resume re-runs it from the last committed cycle."""
         tracked: list = []
         try:
             return self._run_cycle(cycle, build_filters, tracked)
         finally:
             for df in tracked:
-                df.unpersist()
+                _release(df)
 
     def _run_cycle(
         self, cycle: int, build_filters: bool, tracked: list
@@ -299,9 +349,11 @@ class FrontierScheduler:
         spark, io, cfg = self.spark, self.io, self.cfg
 
         def _p(df):
-            """persist + register for the end-of-cycle finally unpersist"""
-            tracked.append(df)
-            return df.persist()
+            """lazy local checkpoint + register for run_cycle's release"""
+            cp = df.localCheckpoint(eager=False)
+            tracked.append(cp)
+            return cp
+
         if cfg.auto_salt:
             politeness_salt = salt_factor = self._auto_salt(cycle)
         else:
@@ -349,29 +401,7 @@ class FrontierScheduler:
             )
 
         # ---- 1. ingest: canonicalize -> key -> dedup (batch + seen) -------
-        # spread candidates across all cores BEFORE the pandas UDF — a
-        # single-file seed list would otherwise pin canonicalization to a
-        # couple of input splits (skip the shuffle when the input is
-        # already split finely enough)
-        par = spark.sparkContext.defaultParallelism
-        discoveries = self._discoveries(cycle)
-        if discoveries.rdd.getNumPartitions() < par:
-            discoveries = discoveries.repartition(par)
-        ch = canon_host_udf()
-        cand = (
-            discoveries
-            .withColumn("_ch", ch("url"))
-            .select(
-                F.col("_ch.url_canon").alias("url_canon"),
-                F.col("_ch.host").alias("host"),
-                F.col("priority").cast("int").alias("priority"),
-                "discovered_ts",
-                "src_host",
-            )
-            .where(F.col("url_canon").isNotNull())  # unparseable hrefs drop
-            .withColumn("url_hash", F.xxhash64("url_canon"))
-            .withColumn("host_bucket", _bucket(F.col("host"), cfg.n_buckets))
-        )
+        cand = self._candidates(cycle)
         if cfg.host_rank_priority:
             # authority loop: boost discovered candidates by the LATEST
             # committed host_rank build (host-cardinality dim — broadcast
@@ -417,7 +447,7 @@ class FrontierScheduler:
             )
             if latest is not None:
                 cand = cand.drop("_rh", "rnk")
-        _p(cand)
+        cand = _p(cand)
         tick("ingest: candidates", cand)
 
         # within-batch dedup: keep max priority per key (all other columns
@@ -452,10 +482,11 @@ class FrontierScheduler:
             definite_new, maybe_seen, tested_frame = split_by_filter(
                 cand, io, cycle - 1, cfg
             )
-            if tested_frame is not None:  # persisted inside split_by_filter;
-                # None when no filter shard exists yet (e.g. the previous
-                # cycle ran with build_filters=False and none were ever
-                # committed) — appending None would crash the finally
+            if tested_frame is not None:  # checkpointed inside
+                # split_by_filter; None when no filter shard exists yet
+                # (e.g. the previous cycle ran with build_filters=False and
+                # none were ever committed) — appending None would crash
+                # the finally
                 tracked.append(tested_frame)
                 confirmed_new = _dedup_g(maybe_seen).join(
                     seen, "url_hash", "left_anti"
@@ -487,14 +518,15 @@ class FrontierScheduler:
             "discovered_ts",
             F.lit(0).cast("int").alias("retries"),
         )
-        _p(ingested)  # reused by pending union AND url_seen delta
+        # reused by pending union AND url_seen delta
+        ingested = _p(ingested)
 
         pending_all = (
             ingested if fresh_start else pending_prev.unionByName(ingested)
         )
-        # not persisted: its ONLY consumer is the with_robots frame, which
-        # is itself cached below — a second cache layer here would just pay
-        # an extra full-frontier cache write+read per cycle
+        # not checkpointed: its ONLY consumer is the with_robots frame,
+        # which is itself checkpointed below — a second layer here would
+        # just pay an extra full-frontier block write+read per cycle
         tick("dedup+union pending", pending_all)
 
         # ---- 2. robots (SkipContainer analog) -----------------------------
@@ -503,11 +535,11 @@ class FrontierScheduler:
             pending_all, self.robots, rfc=cfg.robots_rfc,
             small=self._robots_small,
         )
-        # persist: three consumers (the ranked window build, the skipped
+        # checkpoint: three consumers (the ranked window build, the skipped
         # slice of the resolved write, and lineage's m_scan agg) — without
-        # the cache each re-ran the robots rule join + path regex over the
-        # full frontier (one pass per consumer per cycle)
-        _p(with_robots)
+        # it each re-ran the robots rule join + path regex over the full
+        # frontier (one pass per consumer per cycle)
+        with_robots = _p(with_robots)
         skipped = with_robots.where("blocked")
         eligible = with_robots.where("NOT blocked").drop("blocked")
 
@@ -547,20 +579,19 @@ class FrontierScheduler:
         # so the per-host rank is byte-identical, but the window's
         # ClusteredDistribution is satisfied by the in-plan partitioning
         # (subset rule) and no second exchange is planned. The repartition
-        # must live in THIS plan, not below a persist: a cached subplan is
-        # compiled under AQE (AdaptiveSparkPlan) and its InMemoryTableScan
-        # reports UnknownPartitioning to consumers — partitioning reuse
-        # never crosses a cache boundary here (measured: the window above
-        # the cached frame re-exchanged regardless). The salted two-phase
-        # window deliberately SPLITS a host across tasks and keeps its own
-        # (host, salt) exchange.
+        # must live in THIS plan, not below a checkpoint: a checkpointed
+        # subplan runs under AQE (AdaptiveSparkPlan), and the LogicalRDD
+        # leaf that replaces it reports UnknownPartitioning to consumers —
+        # partitioning reuse never crosses a checkpoint boundary here. The
+        # salted two-phase window deliberately SPLITS a host across tasks
+        # and keeps its own (host, salt) exchange.
         if bucketed_window:
             eligible = eligible.repartition(cfg.n_buckets, "host_bucket")
         ranked = rank_by_budget(
             eligible, budgets_dim, cfg.default_budget,
             salt=politeness_salt, bucketed=bucketed_window,
         )
-        _p(ranked)
+        ranked = _p(ranked)
         tick("robots+budget window", ranked)
         # keep rk: it is the per-host crawl-order rank, reused below for
         # crawl-delay pacing (planned_fetch_ts)
@@ -604,13 +635,13 @@ class FrontierScheduler:
             fetched = fetched.withColumn("_text", F.col("_h.extracted"))
         # drop page bodies IMMEDIATELY — nothing downstream shuffles html
         fetched = fetched.drop("html", "text", "page_canon", "_h")
-        _p(fetched)
+        fetched = _p(fetched)
         tick("fetch+extract", fetched)
 
         if os.environ.get("FRONTIER_EXPLAIN") == "1":
             # plan capture for docs/EXPLAIN.md (ingest->dedup->robots->
-            # budget->fetch); persisted frames show as InMemoryRelation
-            # with their child plans inline
+            # budget->fetch); upstream checkpoints show as ExistingRDD
+            # scans, so this prints the fetch stage's own plan
             print(f"=== CYCLE {cycle} PIPELINE PLAN (fetched) ===", flush=True)
             fetched.explain("formatted")
 
@@ -688,8 +719,8 @@ class FrontierScheduler:
         # results. In the salted case fetch_seq must still rank the WHOLE
         # bucket in one window task, so the salt split happens after it.
         scheduled_c = scheduled.withColumn("cycle", F.lit(cycle))
-        # the explicit repartition stays: scheduled reads the RANKED CACHE,
-        # and cached subplans report UnknownPartitioning (see the ranked
+        # the explicit repartition stays: scheduled reads the RANKED
+        # CHECKPOINT, whose leaf reports UnknownPartitioning (see the ranked
         # comment above) — without it EnsureRequirements would insert the
         # same exchange at shuffle.partitions width, under-parallelizing
         # the queue sort + partitioned write relative to n_buckets tasks
@@ -717,10 +748,10 @@ class FrontierScheduler:
             F.lit(cycle).alias("first_seen_cycle"),
         )
 
-        # done + errored in ONE pass over the fetched cache (same row set as
-        # the two separate branch scans: ok -> done, terminal miss -> error;
-        # retriable rows are excluded by the where), plus the skipped slice
-        # of the persisted with_robots frame
+        # done + errored in ONE pass over the fetched checkpoint (same row
+        # set as the two separate branch scans: ok -> done, terminal miss ->
+        # error; retriable rows are excluded by the where), plus the
+        # skipped slice of the checkpointed with_robots frame
         resolved = (
             fetched.where(
                 F.col("ok") | (F.col("retries") >= cfg.retry_limit)
@@ -776,12 +807,12 @@ class FrontierScheduler:
 
         # shared corpus projection for the value-add stages: the scalar
         # enrichment AND the ANN embedding/cell are fused into ONE
-        # persisted pass over the cycle's fetched text (stage_frame) —
+        # checkpointed pass over the cycle's fetched text (stage_frame) —
         # separate write jobs don't share plan subtrees, so unfused, the
         # page_stats and ann_index writes each re-ran their own
-        # tokenize + higher-order-filter work over the cached rows (the
+        # tokenize + higher-order-filter work over the fetched rows (the
         # dominant interpreted per-row cost of a stage-stack cycle).
-        # Consumers below only column-prune the warm cache.
+        # Consumers below only column-prune the warm checkpoint.
         stage_frame = None
         if cfg.enrich_pages or cfg.ann_index:
             from .corpus import ann_enrich, enrich_scalars
@@ -792,7 +823,7 @@ class FrontierScheduler:
             if cfg.ann_index:
                 stage_frame = ann_enrich(stage_frame, "_text")
             stage_frame = stage_frame.drop("_text")
-            _p(stage_frame)
+            stage_frame = _p(stage_frame)
 
         if cfg.enrich_pages:
             # training-data stage over this cycle's fetched corpus: the SAME
@@ -801,11 +832,11 @@ class FrontierScheduler:
             # + one banded LSH agg — no Python, no all-pairs join.
             from .corpus import band_keys, nd_group_join
 
-            # materialize the MinHash band rows ONCE (persist): they feed
-            # THREE consumers — page_stats' nd_group, the committed
+            # materialize the MinHash band rows ONCE (checkpoint): they
+            # feed THREE consumers — page_stats' nd_group, the committed
             # nd_bands table, and (on closure cycles) the CC edge build —
             # and concurrent write jobs do not share exchanges, so an
-            # unpersisted frame would re-run the whole shingle-explode +
+            # uncached frame would re-run the whole shingle-explode +
             # signature pipeline per consumer (measured: the dominant cost
             # of a stage-stack bench cycle).
             nd_bands_full = _p(band_keys(
@@ -916,7 +947,8 @@ class FrontierScheduler:
                     )
                     meta_nd_mode = "incremental"
 
-                _p(delta_bands)  # consumed by newg, edges, count
+                # consumed by newg, edges, count
+                delta_bands = _p(delta_bands)
                 newg = delta_bands.groupBy("band", "bkey").agg(
                     F.min("_id").alias("ng")
                 )
@@ -935,7 +967,7 @@ class FrontierScheduler:
                         "pg",
                     )
                 )
-                _p(merged)
+                merged = _p(merged)
                 edges = (
                     # delta docs -> merged bucket min
                     delta_bands.join(
@@ -1150,7 +1182,7 @@ class FrontierScheduler:
         if cfg.auto_salt:
             meta["auto_salt"] = salt_factor  # observability + test hook
             # hottest-host share of this cycle's eligible frontier: feeds
-            # the NEXT cycle's _auto_salt. One job over the persisted
+            # the NEXT cycle's _auto_salt. One job over the checkpointed
             # ranked frame (map-side partial agg -> n_hosts -> 1 row).
             depth = (
                 ranked.groupBy("host")
@@ -1247,12 +1279,15 @@ class FrontierScheduler:
                 )
 
         tick("plan outputs")
-        # the lineage write goes FIRST, sequentially: its plan traverses every
-        # persisted frame (cand, ingested, pending_all, ranked, fetched), so
-        # writing it materializes all caches exactly once — the concurrent
-        # writes that follow read warm caches instead of racing to recompute
-        # the pipeline (persist() does not dedupe concurrent materialization).
-        # nd_bands is warmed second for the same reason: its persisted band
+        # the lineage write goes FIRST, sequentially: its plan reads every
+        # pipeline checkpoint (cand, ingested, with_robots, ranked,
+        # fetched), so writing it materializes each exactly once — the
+        # concurrent writes that follow read warm blocks instead of racing
+        # to recompute the pipeline (a lazy checkpoint, like persist(), does
+        # not dedupe concurrent materialization). Every later plan starts
+        # at those checkpoints' LogicalRDD leaves, so each concurrent write
+        # plans, code-generates and ships only its own short tail.
+        # nd_bands is warmed second for the same reason: its checkpointed band
         # rows feed page_stats' nd_group too, and the two writes racing
         # would each re-run the shingle+signature pipeline. ann_index is
         # warmed third: its write materializes the shared stage_frame
@@ -1282,18 +1317,17 @@ class FrontierScheduler:
             manifest = io.commit_meta_update(cycle, meta_update)
             tick("rebuild filters")
 
-        lin_rows = io.read_cycle(
-            spark, "lineage", cycle, schemas.LINEAGE
-        ).collect()
+        # n_buckets rows: read back on the driver, not as a Spark job
+        lin_rows = io.read_cycle_rows("lineage", cycle, schemas.LINEAGE)
         n_sched = sum(r["enqueued"] for r in lin_rows)
         tick("read lineage")
 
-        # persisted frames are unpersisted by run_cycle's finally (tracked)
+        # tracked frames are released by run_cycle's finally
         return CycleResult(
             cycle=cycle,
             scheduled_rows=n_sched,
             manifest=manifest,
-            lineage=[r.asDict() for r in lin_rows],
+            lineage=lin_rows,
         )
 
     def run(self, cycles: int, start_cycle: int | None = None) -> list[CycleResult]:

@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """min(48g, half of physical RAM): in local mode the driver JVM runs
+    every task, and a heap cap above the machine's RAM lets it grow until
+    the kernel kills it instead of collecting garbage."""
+    half_mb = (
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    )
+    return f"{max(1024, min(48 * 1024, half_mb))}m"
+
+
 def get_spark(
     master: str | None = None,
     app: str = "frontier-engine",
@@ -36,7 +46,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -87,10 +87,10 @@ class TableIO:
         manifest — the all-or-nothing checkpoint barrier.
         ``tables``: name -> (df, partition_by or None).
         ``warm``: table names written SEQUENTIALLY first — a write whose plan
-        traverses every persisted upstream frame materializes the caches once,
-        so the concurrent writes that follow read warm caches instead of
-        racing to recompute the full pipeline (persist() does not dedupe
-        concurrent materialization)."""
+        reads every lazily checkpointed (or persisted) upstream frame
+        materializes them once, so the concurrent writes that follow read
+        warm blocks instead of racing to recompute the full pipeline
+        (neither dedupes concurrent materialization)."""
         from concurrent.futures import ThreadPoolExecutor
 
         entry: dict = {"cycle": cycle, "parent": cycle - 1, "tables": {}}
@@ -171,7 +171,14 @@ class TableIO:
         return None
 
     def _empty(self, spark, schema):
-        return spark.createDataFrame([], schema)
+        """An empty frame of ``schema`` from an empty Arrow table: a
+        LocalTableScan the optimizer prunes, where an empty Python list
+        would plan an RDD scan that runs a job through Python workers."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return spark.createDataFrame(
+            to_arrow_schema(schema).empty_table(), schema
+        )
 
     def read_cycle(self, spark, name: str, cycle: int, schema):
         """Read a carry/percycle table exactly at cycle k."""
@@ -181,6 +188,22 @@ class TableIO:
         return spark.read.schema(schema).parquet(
             os.path.join(self.root, m["tables"][name])
         )
+
+    def read_cycle_rows(self, name: str, cycle: int, schema) -> list[dict]:
+        """A small committed table at cycle k as plain dicts, read on the
+        driver with pyarrow — no Spark job. For driver-sized tables only
+        (e.g. the per-bucket lineage); an uncommitted table reads as []."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        m = self.manifest(cycle)
+        if m is None or name not in m["tables"]:
+            return []
+        return ds.dataset(
+            os.path.join(self.root, m["tables"][name]),
+            format="parquet",
+            schema=to_arrow_schema(schema),
+        ).to_table().to_pylist()
 
     def appended_dirs(self, name: str, through_cycle: int) -> list[str]:
         """Committed dirs of an append table through cycle k (newest base

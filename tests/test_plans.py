@@ -50,7 +50,10 @@ def test_prefilter_adds_no_exchange(spark, tiny_fixture_dir,
     """split_by_filter must test candidates in place (mapInPandas), not
     re-shuffle them into bucket groups: between the within-batch dedup agg
     and the exact anti-join there must be NO new Exchange on the prefiltered
-    path beyond what the agg itself requires."""
+    path beyond what the agg itself requires. The probe frame is a local
+    checkpoint, so the splits' plans start at its LogicalRDD leaf and the
+    probe's own shuffles show in the checkpointed RDD's lineage (one
+    ShuffledRowRDD per exchange read)."""
     from frontier_engine.config import config_for_fixture
     from frontier_engine.fixtures import FixtureConfig
     from frontier_engine.golden import build_engine
@@ -74,12 +77,16 @@ def test_prefilter_adds_no_exchange(spark, tiny_fixture_dir,
     )
     base_exchanges = _plan(cand).count("Exchange hashpartitioning")
     definite_new, maybe_seen, tested = split_by_filter(cand, eng.io, 1, cfg)
+    probe = tested._jdf.queryExecution().logical()
+    assert probe.getClass().getSimpleName() == "LogicalRDD"
+    lineage = probe.rdd().toDebugString()
+    assert lineage.count("ShuffledRowRDD") == base_exchanges, lineage
     for df in (definite_new, maybe_seen):
         plan = _plan(df)
-        assert "MapInPandas" in plan, plan
-        assert plan.count("Exchange hashpartitioning") == base_exchanges, plan
-    if tested is not None:
-        tested.unpersist()
+        assert "Exchange" not in plan and "ExistingRDD" in plan, plan
+    from frontier_engine.scheduler import _release
+
+    _release(tested)
 
 
 def test_ann_stage_stays_jvm_side(spark):
@@ -254,3 +261,63 @@ def test_filter_cap_scan_is_partition_pruned(spark, tmp_path):
         "PartitionFilters:")[1].split("PushedFilters")[0] for ln in pf), plan
     # and the pruned read returns exactly the two buckets' rows
     assert pruned.count() == 100
+
+
+def _canon_evals(plan: str) -> int:
+    return sum(
+        "ArrowEvalPython" in ln and "_canon_host" in ln
+        for ln in plan.splitlines()
+    )
+
+
+def test_canonicalize_once_per_url(spark, tiny_fixture_dir,
+                                   tmp_path_factory):
+    """Both plans that canonicalize URLs — a cycle's candidates and the
+    prepare_pages corpus — evaluate the canon UDF ONCE per row: the NULL
+    filter must not be pushed below the projection into a second Python
+    stage. On cycle 1 the seed list is round-robin spread first, and the
+    one evaluation runs above that exchange."""
+    import os
+
+    from frontier_engine.config import config_for_fixture
+    from frontier_engine.fixtures import FixtureConfig
+    from frontier_engine.golden import build_engine
+    from frontier_engine.scheduler import canon_pages
+
+    cfg = config_for_fixture(FixtureConfig(n_urls=2000))
+    work = str(tmp_path_factory.mktemp("engine-plan-canon"))
+    eng = build_engine(spark, tiny_fixture_dir, work, cfg)
+    eng.run(cycles=1)
+    for cycle in (1, 2):  # seeds, then committed discoveries
+        plan = _plan(eng._candidates(cycle))
+        assert _canon_evals(plan) == 1, plan
+    plan = _plan(eng._candidates(1))
+    assert "RoundRobinPartitioning" in plan
+    assert plan.index("ArrowEvalPython") < plan.index(
+        "RoundRobinPartitioning"
+    ), plan  # the UDF node is printed above (= runs after) the exchange
+    pages = _plan(canon_pages(
+        spark, os.path.join(tiny_fixture_dir, "pages.parquet"), cfg
+    ))
+    assert _canon_evals(pages) == 1, pages
+
+
+def test_driver_side_frames_are_local_scans(spark, tmp_path):
+    """Small frames the engine builds from driver values — the budgets
+    dim, TableIO's empty tables, the filter build's one-row-per-bucket
+    task list — must not be RDD scans of Python lists (ExistingRDD):
+    every evaluation of one of those runs a job through Python workers."""
+    from frontier_engine import schemas
+    from frontier_engine.membership import _bucket_rows
+    from frontier_engine.politeness import budgets_df
+    from frontier_engine.tableio import TableIO
+
+    budgets = budgets_df(spark, {"a.com": 2, "b.com": 5})
+    empty = TableIO(str(tmp_path))._empty(spark, schemas.PENDING)
+    buckets = _bucket_rows(spark, host_bucket=[3, 5, 6], src_cycle=[1, 1, 2])
+    for df in (budgets, empty, buckets):
+        assert "ExistingRDD" not in _plan(df), _plan(df)
+    assert sorted(map(tuple, budgets.collect())) == [("a.com", 2), ("b.com", 5)]
+    assert empty.schema == schemas.PENDING and empty.count() == 0
+    assert buckets.rdd.getNumPartitions() == 3
+    assert [tuple(r) for r in buckets.collect()] == [(3, 1), (5, 1), (6, 2)]
