@@ -19,6 +19,12 @@ membership  cuckoo filter (bloom fallback) URL-seen prefilter
 politeness  robots prefix filter + per-host budget window
 scheduler   the Spark cycle loop (run_cycle / run / resume)
 session     tuned SparkSession factory
+zipcache    keeps per-task ``importlib.invalidate_caches()`` from re-parsing
+            unchanged zip archives (installed here, on package import)
 """
+
+from . import zipcache as _zipcache
+
+_zipcache.install()
 
 __version__ = "0.1.0"

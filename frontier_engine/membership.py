@@ -459,16 +459,21 @@ _ROW_COLS = ["host_bucket", "kind", "n_bits", "status", "data"]
 
 
 def _bucket_rows(spark, **cols: list):
-    """One INT row per task from equal-length driver lists (row i holds
-    every list's i-th value): ``range(n, numPartitions=n)`` indexes array
-    literals, so the frame needs no Python-built RDD (a job through Python
-    workers) and no round-robin shuffle to spread one bucket per task —
-    the row IS the bucket, any task assignment is correct."""
+    """INT rows from equal-length driver lists (row i holds every list's
+    i-th value), packed into ``min(n, defaultParallelism)`` tasks:
+    ``range`` indexes array literals, so the frame needs no Python-built
+    RDD (a job through Python workers) and no round-robin shuffle — the
+    row IS the bucket, any task assignment is correct. Packing spares a
+    Python task per bucket beyond the core count; the consumers yield one
+    frame per bucket, so a task still holds one serialized filter at a
+    time, and each bucket still lands in exactly one task (one file per
+    ``host_bucket=`` dir)."""
     from pyspark.sql import functions as F
 
     n = len(next(iter(cols.values())))
     idx = (F.col("id") + 1).cast("int")
-    return spark.range(n, numPartitions=max(1, n)).select(*(
+    par = min(n, spark.sparkContext.defaultParallelism)
+    return spark.range(n, numPartitions=max(1, par)).select(*(
         F.element_at(F.array(*(F.lit(int(v)) for v in vals)), idx)
         .cast("int")
         .alias(name)
@@ -520,10 +525,10 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     # only to regroup rows the write had ALREADY grouped; instead the
     # driver lists each bucket's files from the committed dirs (manifest
     # walk + footer metadata, no Spark job — this also replaces the
-    # fresh-capacity count-agg job with parquet row counts) and one task
-    # per bucket streams its own files' row groups straight into the
-    # filter. Split-safety is by construction: a task owns whole buckets,
-    # never a byte range of one.
+    # fresh-capacity count-agg job with parquet row counts) and each task
+    # streams its buckets' files' row groups straight into the filters,
+    # one bucket at a time. Split-safety is by construction: a task owns
+    # whole buckets, never a byte range of one.
     import glob as _glob
 
     import pyarrow.parquet as _pq
@@ -548,7 +553,7 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
         import pandas as _pd
         import pyarrow.parquet as _apq
 
-        rows = []
+        # one frame per bucket: a packed task holds one filter at a time
         for pdf in batches:
             for b in pdf["host_bucket"]:
                 b = int(b)
@@ -597,16 +602,16 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
                 )
                 r["host_bucket"] = b
                 r["status"] = "ok" if ok else "overflow"
-                rows.append(r)
-        yield _pd.DataFrame(rows, columns=_ROW_COLS)
+                f = None
+                yield _pd.DataFrame([r], columns=_ROW_COLS)
 
     touched = sorted(files_by_bucket)
     upsert_df = _bucket_rows(spark, host_bucket=touched).mapInPandas(
         upsert_batches, out_schema
     )
     rel = f"filters/cycle={cycle}/stage=upsert"
-    # hive-partition by host_bucket (one row per task -> one file per
-    # bucket dir); readers then open exactly their bucket's file
+    # hive-partition by host_bucket (each bucket in one task -> one file
+    # per bucket dir); readers then open exactly their bucket's file
     io._write_df(upsert_df, rel, ["host_bucket"])
     # Status read-back: driver-side pyarrow over the per-bucket files'
     # status column only — NOT a Spark job (the round-3 spark.read +
@@ -710,7 +715,6 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
             def copy_batches(batches):
                 import pandas as _pd
 
-                rows = []
                 for pdf in batches:
                     for b, c in zip(pdf["host_bucket"], pdf["src_cycle"]):
                         f = load_bucket_filter(root, int(c), int(b))
@@ -719,8 +723,8 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
                         r = f.to_row()
                         r["host_bucket"] = int(b)
                         r["status"] = "carried"
-                        rows.append(r)
-                yield _pd.DataFrame(rows, columns=_ROW_COLS)
+                        f = None
+                        yield _pd.DataFrame([r], columns=_ROW_COLS)
 
             carry_rel = f"filters/cycle={cycle}/stage=carry"
             io._write_df(

@@ -159,8 +159,9 @@ def _lineage_wide(
     """Per-bucket lineage in ONE aggregation per source frame (5 scans), each
     producing several metrics via conditional sums — replaces the earlier
     7-scan long-format union + pivot. The frames are the checkpointed
-    pipeline stages, so computing lineage doubles as the pass that
-    materializes every checkpoint before the concurrent commit writes."""
+    pipeline stages, so computing lineage doubles as the pass that runs
+    every checkpoint's last stage before the concurrent commit writes (under
+    AQE, ``localCheckpoint`` itself already ran the stages below it)."""
     one = F.count(F.lit(1))
     m_cand = cand.groupBy("host_bucket").agg(one.alias("cand_total"))
     m_disc = ingested.groupBy("host_bucket").agg(one.alias("discovered"))
@@ -1279,18 +1280,21 @@ class FrontierScheduler:
                 )
 
         tick("plan outputs")
-        # the lineage write goes FIRST, sequentially: its plan reads every
-        # pipeline checkpoint (cand, ingested, with_robots, ranked,
-        # fetched), so writing it materializes each exactly once — the
-        # concurrent writes that follow read warm blocks instead of racing
-        # to recompute the pipeline (a lazy checkpoint, like persist(), does
-        # not dedupe concurrent materialization). Every later plan starts
-        # at those checkpoints' LogicalRDD leaves, so each concurrent write
-        # plans, code-generates and ships only its own short tail.
-        # nd_bands is warmed second for the same reason: its checkpointed band
-        # rows feed page_stats' nd_group too, and the two writes racing
-        # would each re-run the shingle+signature pipeline. ann_index is
-        # warmed third: its write materializes the shared stage_frame
+        # Most of the pipeline has already run by now: under AQE each
+        # localCheckpoint(eager=False) above executed its frame's shuffle-
+        # map stages when it was called, one frame at a time while this
+        # method built the plan. What stays lazy is each checkpoint's last
+        # (post-shuffle) stage. The lineage write goes FIRST, sequentially:
+        # its plan reads every pipeline checkpoint (cand, ingested,
+        # with_robots, ranked, fetched), so it runs each of those final
+        # stages exactly once — the concurrent writes that follow read warm
+        # blocks instead of racing to compute them (a lazy checkpoint, like
+        # persist(), does not dedupe concurrent materialization). Every
+        # later plan starts at those checkpoints' LogicalRDD leaves, so each
+        # concurrent write plans, code-generates and ships only its own
+        # short tail. nd_bands is warmed second for the same reason: its
+        # checkpointed band rows feed page_stats' nd_group too. ann_index is
+        # warmed third: its write runs the shared stage_frame's final stage
         # (scalar enrichment + embedding, fused in one pass), which the
         # concurrent page_stats write then reads warm.
         manifest = io.commit(

@@ -87,18 +87,21 @@ class TableIO:
         manifest — the all-or-nothing checkpoint barrier.
         ``tables``: name -> (df, partition_by or None).
         ``warm``: table names written SEQUENTIALLY first — a write whose plan
-        reads every lazily checkpointed (or persisted) upstream frame
-        materializes them once, so the concurrent writes that follow read
-        warm blocks instead of racing to recompute the full pipeline
-        (neither dedupes concurrent materialization)."""
+        reads every lazily checkpointed (or persisted) upstream frame runs
+        each one's remaining stages once, so the concurrent writes that
+        follow read warm blocks instead of racing to compute them (neither
+        dedupes concurrent materialization). Under AQE a lazy
+        ``localCheckpoint`` has already run its shuffle-map stages when it
+        was created; the warm write runs only its final stage."""
         from concurrent.futures import ThreadPoolExecutor
 
         entry: dict = {"cycle": cycle, "parent": cycle - 1, "tables": {}}
         # per-table wall seconds, recorded in the manifest: the writes
         # force their plans (with the warm ordering, each write carries
-        # its stage's materialization cost), so this is the machine-
-        # diffable per-stage attribution benchrun aggregates — measured
-        # from the real writes, no extra actions
+        # its stage's remaining cost; shuffle-map stages that a lazy
+        # checkpoint ran under AQE when it was created are not in it), so
+        # this is the machine-diffable per-stage attribution benchrun
+        # aggregates — measured from the real writes, no extra actions
         entry["write_secs"] = {}
 
         _timing = os.environ.get("FRONTIER_TIMING") == "1"

@@ -1,6 +1,8 @@
-"""run_cycle's checkpointed frames must not outlive the cycle: the blocks
-held for the Spark session (``getPersistentRDDs``) are the same before and
-after a cycle, whether the cycle commits or raises mid-commit."""
+"""run_cycle's checkpointed frames must not outlive the cycle: no RDD is
+held for the Spark session (``getPersistentRDDs``) after a cycle that was
+not held before it, whether the cycle commits or raises mid-commit. The
+check compares RDD ids, not counts: Spark's ContextCleaner may free RDDs
+that earlier tests left behind at any point during the cycle."""
 
 import pytest
 
@@ -9,8 +11,8 @@ from frontier_engine.fixtures import FixtureConfig
 from frontier_engine.golden import build_engine
 
 
-def _blocks(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _blocks(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_run_cycle_releases_blocks(spark, tiny_fixture_dir, tmp_path):
@@ -20,7 +22,7 @@ def test_run_cycle_releases_blocks(spark, tiny_fixture_dir, tmp_path):
         before = _blocks(spark)
         res = eng.run_cycle(cycle)
         assert res.scheduled_rows > 0
-        assert _blocks(spark) == before
+        assert _blocks(spark) <= before
 
 
 def test_failed_cycle_releases_blocks(spark, tiny_fixture_dir, tmp_path):
@@ -38,5 +40,5 @@ def test_failed_cycle_releases_blocks(spark, tiny_fixture_dir, tmp_path):
     before = _blocks(spark)
     with pytest.raises(RuntimeError, match="commit failed"):
         eng.run_cycle(2)
-    assert _blocks(spark) == before
+    assert _blocks(spark) <= before
     assert eng.io.latest_cycle() == 1  # nothing of cycle 2 committed

@@ -358,3 +358,79 @@ def test_mixed_era_store_poisons_until_full_rebuild(spark, tmp_path):
         dtype=np.uint64,
     )
     assert f.contains_many(allh).all()  # full history covered
+
+
+def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
+    """More buckets than cores: the upsert and the consolidation carry run
+    in defaultParallelism tasks, not one task per bucket, yet every
+    ``host_bucket=`` dir still gets exactly one file and every bucket's
+    filter is byte-identical to a one-bucket-per-task build."""
+    import glob as _glob
+    import os as _os
+
+    import pyarrow.parquet as _pq
+
+    from frontier_engine import membership, schemas
+    from frontier_engine.config import EngineConfig
+    from frontier_engine.membership import _bucket_rows
+    from frontier_engine.tableio import TableIO
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    n = 2 * par + 3
+    cfg = EngineConfig(n_buckets=n)
+    assert _bucket_rows(spark, host_bucket=list(range(n))).rdd.getNumPartitions() == par
+
+    def hashes(b, cycle):
+        return [b * 10_000 + cycle * 1_000 + i for i in range(40)]
+
+    def build(root):
+        io = TableIO(root)
+        for cycle, buckets in ((1, range(n)), (2, [0, n - 1])):
+            rows = [(h, b, cycle) for b in buckets for h in hashes(b, cycle)]
+            io.commit(cycle, {"url_seen": (
+                spark.createDataFrame(rows, schemas.URL_SEEN), ["host_bucket"]
+            )})
+            io.commit_meta_update(cycle, membership.rebuild_filters(
+                spark, io, cycle, cfg, consolidate=cycle == 2
+            ))
+        return io
+
+    def stage_files(io, stage):
+        out = {}
+        for f in _glob.glob(_os.path.join(
+            io.root, "filters", "cycle=2", f"stage={stage}", "host_bucket=*",
+            "*.parquet",
+        )):
+            b = int(f.split("host_bucket=")[1].split(_os.sep)[0])
+            out.setdefault(b, []).append(f)
+        return out
+
+    packed = build(str(tmp_path / "packed"))
+    upsert, carry = stage_files(packed, "upsert"), stage_files(packed, "carry")
+    assert sorted(upsert) == [0, n - 1]
+    assert sorted(carry) == list(range(1, n - 1))  # more carried than cores
+    for files in list(upsert.values()) + list(carry.values()):
+        assert len(files) == 1, files
+
+    # the same build with one bucket per task (the unpacked layout)
+    def one_bucket_per_task(spark, **cols):
+        with monkeypatch.context() as m:
+            m.setattr(type(sc), "defaultParallelism", property(lambda _: n))
+            return _bucket_rows(spark, **cols)
+
+    assert one_bucket_per_task(
+        spark, host_bucket=list(range(n))
+    ).rdd.getNumPartitions() == n
+    monkeypatch.setattr(membership, "_bucket_rows", one_bucket_per_task)
+    single = build(str(tmp_path / "single"))
+    for b in range(n):
+        f = load_bucket_filter(packed.root, 2, b)
+        seen = hashes(b, 1) + (hashes(b, 2) if b in (0, n - 1) else [])
+        assert f.contains_many(np.array(seen, dtype=np.uint64)).all()
+        stage = "upsert" if b in (0, n - 1) else "carry"
+        data = [
+            _pq.read_table(fs[b][0], columns=["data"])["data"][0].as_py()
+            for fs in (stage_files(packed, stage), stage_files(single, stage))
+        ]
+        assert data[0] == data[1]
