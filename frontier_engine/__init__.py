@@ -17,7 +17,8 @@ refspec     single-threaded golden scheduler (the correctness oracle)
 tableio     Parquet-backed snapshot tables: manifest commit / read_at / resume
 membership  cuckoo filter (bloom fallback) URL-seen prefilter
 politeness  robots prefix filter + per-host budget window
-scheduler   the Spark cycle loop (run_cycle / run / resume)
+scheduler   the Spark crawl core (run_cycle / run / resume)
+handlers    output-only cycle handlers: corpus stages, host graph
 session     tuned SparkSession factory
 zipcache    keeps per-task ``importlib.invalidate_caches()`` from re-parsing
             unchanged zip archives (installed here, on package import)

@@ -304,14 +304,3 @@ def canon_host_udf():
 
     return F.pandas_udf(_canon_host, schema).asNondeterministic()
 
-
-def host_udf():
-    """``pandas_udf`` extracting the host of a canonical-URL STRING column."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.StringType())
-    def _host(urls):
-        return urls.map(lambda u: host_of(u) if u is not None else None)
-
-    return _host

@@ -69,14 +69,17 @@ class EngineConfig:
     # successfully fetched pages: fingerprint / quality / token counts /
     # language ID / MinHash-LSH near-dup group). Off by default: it is
     # value-add output beyond the frontier metric, not cycle bookkeeping.
+    # This and the ann_* / nd_closure_every options turn on
+    # handlers.corpus_handler; host_rank_every turns on
+    # handlers.host_graph_handler. The crawl core never reads them.
     enrich_pages: bool = False
     # every N cycles (0 = off), compute the fixed-point-integer host
     # authority rank (graph.integer_pagerank — the SAME transform the
     # driver's host_pagerank query oracle-checks) over the accumulated
     # host link graph and commit it as a host_rank table. Edges are
-    # harvested at INGEST (parent host -> canonicalized link host) where
-    # canonicalization is already paid, committed per cycle as the tiny
-    # distinct host_edges table. Output-only: crawl traces are unchanged
+    # harvested from the cycle's candidates (parent host -> canonicalized
+    # link host), where canonicalization is already paid, and committed
+    # per cycle as the tiny distinct host_edges table. Output-only: crawl traces are unchanged
     # (golden-pinned); a deployment would feed rnk into seed priorities.
     host_rank_every: int = 0
     # close the authority loop (needs host_rank_every): discovered

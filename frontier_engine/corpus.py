@@ -4,7 +4,7 @@ The round-1 pipeline ops (fingerprint / language-ID / quality / token counts
 / MinHash-LSH near-dup) existed only as standalone driver queries; this
 module is the shared transform that makes them an ENGINE stage: the
 scheduler applies it to each cycle's successfully fetched pages and commits
-a ``page_stats`` table through TableIO (scheduler.run_cycle, cfg
+a ``page_stats`` table through TableIO (handlers.corpus_handler, cfg
 ``enrich_pages``), and the driver query ``corpus_enrich`` applies the exact
 same transform to the ``documents`` table where DuckDB can oracle-check
 every column.

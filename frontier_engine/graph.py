@@ -134,13 +134,26 @@ def _canon(df: DataFrame, a: str, b: str) -> DataFrame:
 
 
 def connected_components_star(
-    edges: DataFrame, vertices: DataFrame, max_rounds: int = 50
+    edges: DataFrame,
+    vertices: DataFrame,
+    max_rounds: int = 50,
+    tracked: list | None = None,
 ) -> tuple[DataFrame, int]:
     """(components, rounds): components = [id, comp] with comp = the
     component's minimum vertex id; rounds = star-contraction rounds run
     (O(log n) — pinned by the chain-fixture test). ``edges`` needs columns
-    (src, dst); ``vertices`` one column ``id`` (singletons keep comp=id)."""
-    e = _canon(edges, "src", "dst").localCheckpoint()
+    (src, dst); ``vertices`` one column ``id`` (singletons keep comp=id).
+    ``tracked`` (engine path): each round's checkpoint is registered on
+    the caller's list for its end-of-cycle release, as in
+    ``integer_pagerank``."""
+
+    def _cp(df):
+        cp = df.localCheckpoint()
+        if tracked is not None:
+            tracked.append(cp)
+        return cp
+
+    e = _cp(_canon(edges, "src", "dst"))
     rounds = 0
     converged = False
     for _ in range(max_rounds):
@@ -170,7 +183,7 @@ def connected_components_star(
                 smins.select(F.col("u").alias("src"), F.col("m").alias("dst"))
             )
         )
-        new_e = _canon(small, "src", "dst").localCheckpoint()
+        new_e = _cp(_canon(small, "src", "dst"))
         changed = (
             new_e.exceptAll(e)
             .unionByName(e.exceptAll(new_e))

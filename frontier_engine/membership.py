@@ -303,19 +303,9 @@ def filter_locations(io, through_cycle: int):
     cycle, so that old row still covers it through last_build_cycle. Cost:
     manifest JSONs only — no data reads.
 
-    Mixed-era safety (round-4 advice): pre-parquet-store manifests
-    (round-2 .npz sidecars) have "filters" but no "filters_buckets"; their
-    data lives outside TableIO and is unreadable here. Worse, parquet
-    builds LAYERED on such a build may cover only their delta range —
-    trusting them would misclassify older url_seen rows as definitely-new
-    (duplicate crawls). So hitting a legacy manifest POISONS the walk
-    unless a "filters_full" build (one whose inserts covered deltas from
-    cycle 1, or a consolidation of clean rows) was already visited above
-    it: poisoned stores return (0, {}), which routes every candidate
-    through the exact anti-join AND makes the next rebuild_filters insert
-    from cycle 1 — marking itself filters_full, so the store self-heals
-    after one cycle. A visited filters_full manifest also ends the walk:
-    it covered every data-bearing bucket, so older entries are moot."""
+    A visited "filters_full" manifest (a build whose inserts covered
+    deltas from cycle 1, or a consolidation) ends the walk: it covered
+    every data-bearing bucket, so older entries are moot."""
     last_build = 0
     loc: dict[int, int] = {}
     for c in range(through_cycle, 0, -1):
@@ -325,8 +315,6 @@ def filter_locations(io, through_cycle: int):
         meta = m.get("meta", {})
         if meta.get("filters") is None:
             continue
-        if "filters_buckets" not in meta:
-            return 0, {}  # legacy build with no clean full build above it
         if last_build == 0:
             last_build = c
         for b in meta.get("filters_buckets", []):
@@ -443,7 +431,7 @@ def split_by_filter(cand: "DataFrame", io, through_cycle: int, cfg):
             cand.sparkSession, "url_seen", last_build + 1, through_cycle,
             schemas.URL_SEEN,
         )
-        ttl = getattr(cfg, "recrawl_after_cycles", None)
+        ttl = cfg.recrawl_after_cycles
         if ttl is not None:
             # scheduler window at cycle = through_cycle + 1
             ttl_lo = max(1, through_cycle + 2 - ttl)
@@ -513,7 +501,7 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     # several cycles; building from read_cycle(cycle) alone would leave the
     # intervening deltas permanently missing from all later filters and
     # misclassify seen URLs as definitely-new (duplicate url_seen rows).
-    # A from-scratch build (fresh store, or post-poison self-heal) reads
+    # A from-scratch build (no filter committed yet) reads
     # the CONSOLIDATED view instead: base + O(compact_every) tail dirs —
     # the same row set as unioning every delta dir since cycle 1, without
     # the O(cycles) dir-union pathology compaction exists to prevent.
@@ -754,9 +742,7 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
                 if n.startswith("cycle=") and int(n.split("=")[1]) < cycle:
                     _shutil.rmtree(os.path.join(fdir, n), ignore_errors=True)
         # consolidation leaves every live bucket with a row at this cycle:
-        # a clean full snapshot (poisoned stores can't reach here with
-        # copies — filter_locations returns (0, {}) for them, forcing the
-        # from-scratch branch below instead)
+        # a full snapshot
         return {
             "filters": len(written),
             "filters_buckets": sorted(written),
@@ -769,8 +755,7 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
         "filters_buckets": sorted(written),
     }
     if prev_found == 0:
-        # built from deltas 1..cycle -> covers every data-bearing bucket
-        # from clean history; lets filter_locations stop here and clears
-        # any mixed-era poison below (self-heal)
+        # built from deltas 1..cycle -> covers every data-bearing bucket;
+        # lets filter_locations stop here
         meta["filters_full"] = True
     return meta

@@ -2250,7 +2250,7 @@ FROM s GROUP BY user_id, sid
 
 def q_corpus_enrich(spark, sf_dir):
     """The engine's corpus-enrichment stage (corpus.enrich — the SAME
-    transform scheduler.run_cycle commits as page_stats) applied to the
+    transform handlers.corpus_handler commits as page_stats) applied to the
     documents table where every column is DuckDB-checkable: fingerprint,
     quality stats, token estimate, language ID, MinHash-LSH near-dup group."""
     from .corpus import enrich

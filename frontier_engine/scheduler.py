@@ -2,10 +2,15 @@
 
 One ``run_cycle`` = one ``Crawler.run_once`` of the reference
 (container_crawler/__init__.py ≈L405-430: enumerate → diff vs last_row →
-shard → dispatch → checkpoint). Stage-for-stage mirror of refspec.py's
-normative semantics, expressed as a single declarative DataFrame graph per
-cycle so Catalyst gets the whole plan (pushdown, pruning, broadcast
-selection, AQE skew splitting).
+shard → dispatch → checkpoint). The cycle is the crawl core — ingest →
+dedup → robots → budget → fetch → commit — a stage-for-stage mirror of
+refspec.py's normative semantics, expressed as one declarative DataFrame
+graph per cycle so Catalyst gets the whole plan (pushdown, pruning,
+broadcast selection, AQE skew splitting). Stages that only add output
+(corpus enrichment, near-dup closure, ANN index, host graph) are handlers
+(handlers.py), built once from the config and called before the commit;
+their tables go into the cycle's one commit, and the crawl trace never
+depends on them.
 
 Scale notes (10^10-URL frontier, 1000 executors):
 - the `html BINARY` column is touched ONLY in the fetch join + extraction
@@ -37,20 +42,12 @@ from .canon import canon_host_udf
 from .config import EngineConfig
 from .extract import handle_page_udf
 from .fixtures import T0
+from .handlers import CycleContext, corpus_handler, handlers_for
 from .politeness import apply_robots, budgets_df, rank_by_budget
 from .tableio import TableIO
 
 def _bucket(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
-
-# Write salt for the cell-partitioned ANN index: k-means / LSH cells over
-# web text are Zipf-skewed, and a plain repartition(n_cells, "cell") makes
-# the hottest cell ONE straggler task writing ONE giant file at 100-TB
-# scale. Salting the repartition key (cell, pmod(url_hash, SALT)) spreads a
-# hot cell over up to SALT tasks/files while partitionBy("cell") keeps the
-# directory layout — probe-side partition pruning is unchanged.
-ANN_WRITE_SALT = 4
 
 
 def _canonicalized(df: DataFrame, n_buckets: int, *cols) -> DataFrame:
@@ -234,6 +231,8 @@ class FrontierScheduler:
         from .graph import is_small_dim
 
         self._robots_small = is_small_dim(robots)
+        self._rank_dim_cache = None  # (build cycle, dim): host_rank_priority
+        self._handlers = handlers_for(cfg)
 
     # -- inputs per cycle ---------------------------------------------------
 
@@ -279,13 +278,12 @@ class FrontierScheduler:
         (build_cycle, df) so consumers can cache per-build work — the
         broadcast-gate count in particular runs once per rank BUILD, not
         once per scheduling cycle."""
-        for c in range(cycle - 1, 0, -1):
-            m = self.io.manifest(c)
-            if m and "host_rank" in m.get("tables", {}):
-                return c, self.io.read_cycle(
-                    self.spark, "host_rank", c, schemas.HOST_RANK
-                )
-        return None
+        c = self.io.latest_table_cycle("host_rank", cycle - 1)
+        if c is None:
+            return None
+        return c, self.io.read_cycle(
+            self.spark, "host_rank", c, schemas.HOST_RANK
+        )
 
     def _auto_salt(self, cycle: int) -> int:
         """Physical salt from OBSERVED skew (cfg.auto_salt): the previous
@@ -326,7 +324,8 @@ class FrontierScheduler:
         whole cycle's plan and lineage, so each concurrent commit write
         plans, code-generates and ships a short plan. Each such frame is
         registered on ``tracked`` and released here in a finally, together
-        with the frames ``graph.integer_pagerank`` persists: an exception
+        with the frames the handlers register there (``graph``'s rank
+        persists and closure checkpoints included): an exception
         mid-cycle must not leak blocks into the Spark session for its
         remaining lifetime (a long-running driver loop retries cycles —
         leaked blocks would accumulate across retries). ``df.unpersist()``
@@ -359,23 +358,9 @@ class FrontierScheduler:
             politeness_salt = salt_factor = self._auto_salt(cycle)
         else:
             politeness_salt, salt_factor = cfg.politeness_salt, cfg.salt_factor
-        import time as _time
-
-        _timing = os.environ.get("FRONTIER_TIMING") == "1"
-        _t = [_time.time()]
-
-        def tick(label, df=None):
-            if not _timing:
-                return
-            if df is not None:
-                df.count()  # force, for attribution only
-            now = _time.time()
-            print(f"  [cycle {cycle}] {label}: {now - _t[0]:.1f}s", flush=True)
-            _t[0] = now
-
         fresh_start = io.manifest(cycle - 1) is None  # nothing committed yet
-        # does this cycle consolidate the accumulating tables? needed early:
-        # the ANN stage folds its quantizer retrain into the compaction
+        # does this cycle consolidate the accumulating tables? (the core's
+        # own and, through the cycle context, the handlers')
         compact = cfg.compact_every > 0 and cycle % cfg.compact_every == 0
         pending_prev = io.read_cycle(
             spark, "pending", cycle - 1, schemas.PENDING
@@ -421,7 +406,7 @@ class FrontierScheduler:
                 # hinted dim keyed on the BUILD cycle so cycles between
                 # rank builds reuse it instead of re-counting the same
                 # committed parquet every cycle
-                cached = getattr(self, "_rank_dim_cache", None)
+                cached = self._rank_dim_cache
                 if cached is not None and cached[0] == build_c:
                     rdim = cached[1]
                 else:
@@ -449,7 +434,6 @@ class FrontierScheduler:
             if latest is not None:
                 cand = cand.drop("_rh", "rnk")
         cand = _p(cand)
-        tick("ingest: candidates", cand)
 
         # within-batch dedup: keep max priority per key (all other columns
         # are functionally determined by the key within one batch)
@@ -528,7 +512,6 @@ class FrontierScheduler:
         # not checkpointed: its ONLY consumer is the with_robots frame,
         # which is itself checkpointed below — a second layer here would
         # just pay an extra full-frontier block write+read per cycle
-        tick("dedup+union pending", pending_all)
 
         # ---- 2. robots (SkipContainer analog) -----------------------------
         bucketed_window = politeness_salt <= 1
@@ -593,7 +576,6 @@ class FrontierScheduler:
             salt=politeness_salt, bucketed=bucketed_window,
         )
         ranked = _p(ranked)
-        tick("robots+budget window", ranked)
         # keep rk: it is the per-host crawl-order rank, reused below for
         # crawl-delay pacing (planned_fetch_ts)
         scheduled = ranked.where(F.col("rk") <= F.col("budget")).drop("budget")
@@ -631,20 +613,12 @@ class FrontierScheduler:
             )
             .withColumn("links", F.col("_h.links"))
         )
-        if cfg.enrich_pages or cfg.ann_index:
-            # keep the extracted text ONLY for the enrichment stages below
+        if corpus_handler in self._handlers:
+            # keep the extracted text ONLY for the corpus handler
             fetched = fetched.withColumn("_text", F.col("_h.extracted"))
         # drop page bodies IMMEDIATELY — nothing downstream shuffles html
         fetched = fetched.drop("html", "text", "page_canon", "_h")
         fetched = _p(fetched)
-        tick("fetch+extract", fetched)
-
-        if os.environ.get("FRONTIER_EXPLAIN") == "1":
-            # plan capture for docs/EXPLAIN.md (ingest->dedup->robots->
-            # budget->fetch); upstream checkpoints show as ExistingRDD
-            # scans, so this prints the fetch stage's own plan
-            print(f"=== CYCLE {cycle} PIPELINE PLAN (fetched) ===", flush=True)
-            fetched.explain("formatted")
 
         done = fetched.where("ok")
         miss = fetched.where("NOT ok")
@@ -806,380 +780,19 @@ class FrontierScheduler:
                 None,
             )
 
-        # shared corpus projection for the value-add stages: the scalar
-        # enrichment AND the ANN embedding/cell are fused into ONE
-        # checkpointed pass over the cycle's fetched text (stage_frame) —
-        # separate write jobs don't share plan subtrees, so unfused, the
-        # page_stats and ann_index writes each re-ran their own
-        # tokenize + higher-order-filter work over the fetched rows (the
-        # dominant interpreted per-row cost of a stage-stack cycle).
-        # Consumers below only column-prune the warm checkpoint.
-        stage_frame = None
-        if cfg.enrich_pages or cfg.ann_index:
-            from .corpus import ann_enrich, enrich_scalars
-
-            stage_frame = done.select("url_hash", "host_bucket", "_text")
-            if cfg.enrich_pages:
-                stage_frame = enrich_scalars(stage_frame, "_text")
-            if cfg.ann_index:
-                stage_frame = ann_enrich(stage_frame, "_text")
-            stage_frame = stage_frame.drop("_text")
-            stage_frame = _p(stage_frame)
-
-        if cfg.enrich_pages:
-            # training-data stage over this cycle's fetched corpus: the SAME
-            # transform the driver's corpus_enrich query oracle-checks
-            # (corpus.enrich), committed with everything else. Pure built-ins
-            # + one banded LSH agg — no Python, no all-pairs join.
-            from .corpus import band_keys, nd_group_join
-
-            # materialize the MinHash band rows ONCE (checkpoint): they
-            # feed THREE consumers — page_stats' nd_group, the committed
-            # nd_bands table, and (on closure cycles) the CC edge build —
-            # and concurrent write jobs do not share exchanges, so an
-            # uncached frame would re-run the whole shingle-explode +
-            # signature pipeline per consumer (measured: the dominant cost
-            # of a stage-stack bench cycle).
-            nd_bands_full = _p(band_keys(
-                done.select("url_hash", "_text"), "url_hash", "_text"
-            ))
-            pstats = nd_group_join(
-                stage_frame, nd_bands_full, "url_hash"
-            ).select(*schemas.PAGE_STATS.fieldNames())
-            tables["page_stats"] = (
-                pstats.repartition(cfg.n_buckets, "host_bucket"),
-                ["host_bucket"],
-            )
-            # band rows ride along (~N_BANDS tiny rows per doc): the
-            # cross-cycle near-dup closure below reads THESE, never the
-            # corpus text again
-            nd_bands_delta = nd_bands_full.select(
-                *schemas.ND_BANDS.fieldNames()
-            )
-            tables["nd_bands"] = (nd_bands_delta.coalesce(8), None)
-
-            if cfg.nd_closure_every and cycle % cfg.nd_closure_every == 0:
-                # Near-dup closure over the accumulated corpus — engine
-                # analog of handler dispatch over committed state
-                # (base_handler.py ≈L48): edges = doc <-> min-doc of each
-                # shared (band, bkey) bucket (star edges, never all-pairs
-                # within a bucket), components via O(log n) star
-                # contraction. Vertices come from accumulated page_stats
-                # so shingle-less docs keep singleton components.
-                #
-                # INCREMENTAL from the second closure on: the previous
-                # closure committed nd_components (a star forest — each
-                # doc -> its component min) plus nd_buckets (each (band,
-                # bkey) -> min _id ever seen in it). Seeding with those
-                # two O(docs)/O(buckets) tables + ONLY the delta cycles'
-                # band rows yields exactly the same components as a full
-                # re-cluster (proof sketch: prev star edges preserve all
-                # old connectivity; a delta band row links its doc to the
-                # merged bucket min; a (prev-min -> merged-min) edge per
-                # touched bucket reconnects the old cluster; every added
-                # edge stays inside a true component, so the partition —
-                # and the min labels — are identical; pinned by the
-                # multi-closure union-find golden).
-                from .graph import connected_components_star
-
-                prev_closure = io.latest_table_cycle(
-                    "nd_components", cycle - 1
-                )
-                if prev_closure is None:
-                    delta_bands = io.read_appended(
-                        spark, "nd_bands", cycle - 1, schemas.ND_BANDS
-                    ).unionByName(nd_bands_delta)
-                    prev_buckets = io._empty(spark, schemas.ND_BUCKETS)
-                    prev_star = io._empty(
-                        spark, schemas.ND_COMPONENTS
-                    ).select(
-                        F.col("url_hash").alias("src"),
-                        F.col("nd_comp").alias("dst"),
-                    )
-                    verts = (
-                        io.read_appended(
-                            spark, "page_stats", cycle - 1,
-                            schemas.PAGE_STATS,
-                        )
-                        .select("url_hash")
-                        .unionByName(pstats.select("url_hash"))
-                        .distinct()
-                        .select(F.col("url_hash").alias("id"))
-                    )
-                    meta_nd_mode = "full"
-                else:
-                    delta_bands = io.read_delta_range(
-                        spark, "nd_bands", prev_closure + 1, cycle - 1,
-                        schemas.ND_BANDS,
-                    ).unionByName(nd_bands_delta)
-                    # nd_buckets is delta-committed (touched buckets only);
-                    # the as-of view min-merges base + deltas. g only ever
-                    # decreases across closures, so min over all deltas ==
-                    # the latest closure's value for every bucket.
-                    prev_buckets = (
-                        io.read_appended(
-                            spark, "nd_buckets", prev_closure,
-                            schemas.ND_BUCKETS,
-                        )
-                        .groupBy("band", "bkey")
-                        .agg(F.min("g").alias("g"))
-                    )
-                    prev_comp = io.read_cycle(
-                        spark, "nd_components", prev_closure,
-                        schemas.ND_COMPONENTS,
-                    )
-                    prev_star = prev_comp.where(
-                        F.col("url_hash") != F.col("nd_comp")
-                    ).select(
-                        F.col("url_hash").alias("src"),
-                        F.col("nd_comp").alias("dst"),
-                    )
-                    verts = (
-                        prev_comp.select("url_hash")
-                        .unionByName(
-                            io.read_delta_range(
-                                spark, "page_stats", prev_closure + 1,
-                                cycle - 1, schemas.PAGE_STATS,
-                            ).select("url_hash")
-                        )
-                        .unionByName(pstats.select("url_hash"))
-                        .distinct()
-                        .select(F.col("url_hash").alias("id"))
-                    )
-                    meta_nd_mode = "incremental"
-
-                # consumed by newg, edges, count
-                delta_bands = _p(delta_bands)
-                newg = delta_bands.groupBy("band", "bkey").agg(
-                    F.min("_id").alias("ng")
-                )
-                pb = prev_buckets.select(
-                    "band", "bkey", F.col("g").alias("pg")
-                )
-                merged = (
-                    newg.join(pb, ["band", "bkey"], "full_outer")
-                    .select(
-                        "band",
-                        "bkey",
-                        F.least(
-                            F.coalesce("ng", "pg"), F.coalesce("pg", "ng")
-                        ).alias("g"),
-                        "ng",
-                        "pg",
-                    )
-                )
-                merged = _p(merged)
-                edges = (
-                    # delta docs -> merged bucket min
-                    delta_bands.join(
-                        merged.select("band", "bkey", "g"), ["band", "bkey"]
-                    )
-                    .select(F.col("_id").alias("src"), F.col("g").alias("dst"))
-                    # previous closure's star forest (empty on full path)
-                    .unionByName(prev_star)
-                    # touched buckets: reconnect the old cluster min to the
-                    # merged min (no-op rows g == pg are dropped by _canon)
-                    .unionByName(
-                        merged.where(
-                            F.col("pg").isNotNull() & F.col("ng").isNotNull()
-                        ).select(
-                            F.col("pg").alias("src"), F.col("g").alias("dst")
-                        )
-                    )
-                )
-                comp, nd_rounds = connected_components_star(edges, verts)
-                tables["nd_components"] = (
-                    comp.select(
-                        F.col("id").alias("url_hash"),
-                        F.col("comp").alias("nd_comp"),
-                    ).coalesce(8),
-                    None,
-                )
-                # TOUCHED buckets only (round-5 verdict #3): a bucket with
-                # no delta band row this closure kept g == pg, so omitting
-                # it loses nothing — the next closure's min-merge read (and
-                # the nd_buckets_base compaction) reconstruct the full
-                # view. This keeps the closure's WRITE O(delta) to match
-                # its O(delta) compute; the old full rewrite was O(corpus)
-                # per closure (~N_BANDS rows per doc ever seen).
-                nd_buckets_delta = merged.where(
-                    F.col("ng").isNotNull()
-                ).select("band", "bkey", "g")
-                tables["nd_buckets"] = (nd_buckets_delta.coalesce(8), None)
-                meta_nd_rounds = nd_rounds
-                # closure-input bound for the manifest: incremental reads
-                # O(delta) band rows, never O(history) (tiny count — the
-                # frame is N_BANDS rows per delta doc)
-                meta_nd_input = delta_bands.count()
-            else:
-                meta_nd_rounds = meta_nd_mode = meta_nd_input = None
-                nd_buckets_delta = None
-        else:
-            meta_nd_rounds = meta_nd_mode = meta_nd_input = None
-            nd_buckets_delta = None
-
-        if cfg.ann_index:
-            # ANN index over this cycle's fetched corpus: the SAME transform
-            # the driver's ann_index_cells query oracle-checks
-            # (corpus.ann_enrich) — deterministic hashed-word embedding +
-            # coarse cell, all JVM built-ins (already computed once in the
-            # shared stage_frame pass above). Partitioned by cell: a
-            # similarity probe over the engine's own corpus is a
-            # partition-pruned scan of one (or a few) cells.
-            from .corpus import ANN_IVF_K, N_HYPER
-
-            aidx = stage_frame
-            meta_ann_qc = None
-            retrain = False
-            if cfg.ann_index_mode == "ivf":
-                # trained coarse quantizer (round-4 verdict #4): seeded
-                # quantized-integer k-means over a deterministic md5
-                # sample of the docs; the 256-row centroid stats collect
-                # driver-side (probe-metadata-sized) and come back as a
-                # broadcast literal for the single full-corpus assignment
-                # pass. The quantizer is PINNED: trained ONCE at the first
-                # IVF build and reused verbatim by every later cycle, so
-                # cell ids are comparable across cycles and the per-cycle
-                # deltas consolidate into one whole-corpus index
-                # (ann_index_base below). Stats are re-committed each
-                # cycle (256 tiny rows) so "the quantizer in force at
-                # cycle k" is always read_cycle(ann_centroids, k); the
-                # manifest's ann_quantizer_cycle meta records which cycle
-                # trained them. Golden vs ivf_py.
-                from .corpus import ivf_assign_cells, ivf_train_collect
-
-                retrain = (
-                    cfg.ann_retrain_on_compact
-                    and compact
-                    and io.latest_table_cycle("ann_index", cycle - 1)
-                    is not None
-                )
-                prev_cent = io.latest_table_cycle("ann_centroids", cycle - 1)
-                cent_rows: list = []
-                if retrain:
-                    # quantizer refresh folded into the compaction this
-                    # cycle already pays for: retrain over the ACCUMULATED
-                    # corpus (previous index rows + this cycle's docs) and
-                    # re-pin from here — the compact block below then
-                    # re-assigns the whole base with these stats, so every
-                    # committed dir (base@k + deltas>k) shares one cell
-                    # vocabulary
-                    ann_prev_idx = io.read_appended(
-                        spark, "ann_index", cycle - 1, schemas.ANN_INDEX
-                    )
-                    cent_rows = ivf_train_collect(
-                        ann_prev_idx.select("url_hash", "emb").unionByName(
-                            aidx.select("url_hash", "emb")
-                        ),
-                        "url_hash",
-                        sample_hex=cfg.ann_ivf_sample_hex,
-                    )
-                    meta_ann_qc = cycle
-                elif prev_cent is not None:
-                    cent_rows = sorted(
-                        (r["k"], r["d"], r["s"], r["n"])
-                        for r in io.read_cycle(
-                            spark, "ann_centroids", prev_cent,
-                            schemas.ANN_CENTROIDS,
-                        ).collect()
-                    )
-                    pm = io.manifest(prev_cent) or {}
-                    meta_ann_qc = pm.get("meta", {}).get(
-                        "ann_quantizer_cycle", prev_cent
-                    )
-                if not cent_rows:
-                    # first IVF build — or a degenerate pinned build that
-                    # trained on an EMPTY first corpus (empty stats would
-                    # drop every doc through the inner assignment join
-                    # forever): (re)train here and pin from this cycle on
-                    cent_rows = ivf_train_collect(
-                        aidx, "url_hash", sample_hex=cfg.ann_ivf_sample_hex
-                    )
-                    meta_ann_qc = cycle
-                aidx = ivf_assign_cells(spark, aidx, "url_hash", cent_rows)
-                tables["ann_centroids"] = (
-                    spark.createDataFrame(
-                        cent_rows, schemas.ANN_CENTROIDS
-                    ).coalesce(1),
-                    None,
-                )
-                n_cells = ANN_IVF_K
-            else:
-                n_cells = 1 << N_HYPER
-            ann_index_delta = aidx.select(*schemas.ANN_INDEX.fieldNames())
-            tables["ann_index"] = (
-                ann_index_delta.repartition(
-                    n_cells * ANN_WRITE_SALT,
-                    "cell",
-                    F.pmod(F.col("url_hash"), F.lit(ANN_WRITE_SALT)),
-                ),
-                ["cell"],
-            )
-            if retrain:
-                # the accumulated rows re-assigned under the RETRAINED
-                # stats — the compact block writes these as the base, so
-                # cells are consistent across base@k and every later delta
-                ann_base_rows = (
-                    ivf_assign_cells(
-                        spark, ann_prev_idx, "url_hash", cent_rows
-                    )
-                    .select(*schemas.ANN_INDEX.fieldNames())
-                    .unionByName(ann_index_delta)
-                )
-            else:
-                ann_base_rows = None
-        else:
-            ann_index_delta = None
-            ann_base_rows = None
-            meta_ann_qc = None
-
-        if cfg.host_rank_every:
-            # host link-graph edges, harvested HERE because ingest already
-            # paid the canonicalization: parent host -> canonical link
-            # host, distinct (tiny: bounded by hosts^2, committed per
-            # cycle). Every host_rank_every-th cycle, the fixed-point
-            # integer PageRank (graph.integer_pagerank — the transform the
-            # driver's host_pagerank query oracle-checks) runs over ALL
-            # cycles' edges and commits host_rank. Output-only: the crawl
-            # trace never depends on it (golden-pinned).
-            host_edges_delta = (
-                cand.where(
-                    F.col("src_host").isNotNull()
-                    & (F.col("src_host") != F.col("host"))
-                )
-                .select("src_host", F.col("host").alias("dst_host"))
-                .distinct()
-            )
-            tables["host_edges"] = (host_edges_delta.coalesce(4), None)
-            if cycle % cfg.host_rank_every == 0:
-                from .graph import integer_pagerank
-
-                all_edges = io.read_appended(
-                    spark, "host_edges", cycle - 1, schemas.HOST_EDGES
-                ).unionByName(host_edges_delta)
-                ranks = integer_pagerank(
-                    all_edges.select(
-                        F.col("src_host").alias("src"),
-                        F.col("dst_host").alias("dst"),
-                    ),
-                    tracked=tracked,
-                )
-                tables["host_rank"] = (ranks.coalesce(1), None)
-
-        meta = {}
-        if meta_nd_rounds is not None:
-            # observability + the golden's O(log n) round-bound assertion;
-            # nd_mode/nd_input_bands pin that a non-first closure consumed
-            # only the delta cycles' band rows, not all history
-            meta["nd_rounds"] = meta_nd_rounds
-            meta["nd_mode"] = meta_nd_mode
-            meta["nd_input_bands"] = meta_nd_input
-        if meta_ann_qc is not None:
-            # which cycle TRAINED the IVF quantizer in force this cycle —
-            # pins (engine golden) that cycles after the first reuse the
-            # pinned centroids instead of retraining, the property that
-            # makes cell ids comparable across cycles
-            meta["ann_quantizer_cycle"] = meta_ann_qc
+        # output-only handlers (handlers.py): each adds tables, meta and
+        # warm names to this cycle's single commit; none changes the trace
+        ctx = CycleContext(
+            spark=spark, io=io, cfg=cfg, cycle=cycle, compact=compact,
+            done=done, cand=cand, checkpoint=_p, tracked=tracked,
+        )
+        meta: dict = {}
+        warm = ["lineage"]
+        for handler in self._handlers:
+            h_tables, h_meta, h_warm = handler(ctx)
+            tables.update(h_tables)
+            meta.update(h_meta)
+            warm += h_warm
         if cfg.auto_salt:
             meta["auto_salt"] = salt_factor  # observability + test hook
             # hottest-host share of this cycle's eligible frontier: feeds
@@ -1215,71 +828,7 @@ class FrontierScheduler:
                 spark, "resolved", cycle - 1, schemas.RESOLVED
             ).unionByName(resolved)
             tables["resolved_base"] = (full_resolved.coalesce(8), None)
-            # the two newer accumulating tables compact on the same
-            # cadence (round-4 verdict #6): rank builds and full-closure
-            # fallbacks read O(1) dirs instead of O(cycles). Pure layout
-            # change — the base is the exact union the read path would
-            # have produced (incl. this cycle's delta, which read_appended
-            # skips once a base exists at the same cycle).
-            if cfg.host_rank_every:
-                full_edges = io.read_appended(
-                    spark, "host_edges", cycle - 1, schemas.HOST_EDGES
-                ).unionByName(host_edges_delta)
-                tables["host_edges_base"] = (full_edges.coalesce(4), None)
-            if cfg.enrich_pages:
-                full_bands = io.read_appended(
-                    spark, "nd_bands", cycle - 1, schemas.ND_BANDS
-                ).unionByName(nd_bands_delta)
-                tables["nd_bands_base"] = (full_bands.coalesce(8), None)
-            if cfg.enrich_pages and cfg.nd_closure_every:
-                # nd_buckets is committed as touched-only deltas (the
-                # closure's I/O matches its O(delta) compute); the read
-                # path min-merges deltas per bucket, so the base is that
-                # merged view — g only ever decreases, so min over all
-                # deltas == the latest delta's value for every bucket.
-                nb = io.read_appended(
-                    spark, "nd_buckets", cycle - 1, schemas.ND_BUCKETS
-                )
-                if nd_buckets_delta is not None:
-                    nb = nb.unionByName(nd_buckets_delta)
-                tables["nd_buckets_base"] = (
-                    nb.groupBy("band", "bkey")
-                    .agg(F.min("g").alias("g"))
-                    .coalesce(8),
-                    None,
-                )
-            if cfg.ann_index and ann_index_delta is not None:
-                # whole-corpus ANN consolidation (round-5 verdict #1): the
-                # per-cycle ann_index deltas fold into ONE cell-partitioned
-                # base on the same cadence, so a whole-corpus similarity
-                # probe reads O(1) dirs x nprobe cells instead of O(cycles)
-                # delta dirs. Cell ids are comparable across cycles by
-                # construction (LSH cells are data-independent; IVF cells
-                # come from the pinned quantizer above). Pure layout
-                # change: the base is the exact union the read path would
-                # have produced — recrawled URLs keep one row per fetch
-                # (an index of fetches, like every append table here).
-                # with ann_retrain_on_compact, the base rows were already
-                # re-assigned under the freshly retrained quantizer (same
-                # url_hash/emb content — only cells differ, and every
-                # later delta uses the same new stats)
-                full_idx = (
-                    ann_base_rows
-                    if ann_base_rows is not None
-                    else io.read_appended(
-                        spark, "ann_index", cycle - 1, schemas.ANN_INDEX
-                    ).unionByName(ann_index_delta)
-                )
-                tables["ann_index_base"] = (
-                    full_idx.repartition(
-                        n_cells * ANN_WRITE_SALT,
-                        "cell",
-                        F.pmod(F.col("url_hash"), F.lit(ANN_WRITE_SALT)),
-                    ),
-                    ["cell"],
-                )
 
-        tick("plan outputs")
         # Most of the pipeline has already run by now: under AQE each
         # localCheckpoint(eager=False) above executed its frame's shuffle-
         # map stages when it was called, one frame at a time while this
@@ -1292,16 +841,9 @@ class FrontierScheduler:
         # persist(), does not dedupe concurrent materialization). Every
         # later plan starts at those checkpoints' LogicalRDD leaves, so each
         # concurrent write plans, code-generates and ships only its own
-        # short tail. nd_bands is warmed second for the same reason: its
-        # checkpointed band rows feed page_stats' nd_group too. ann_index is
-        # warmed third: its write runs the shared stage_frame's final stage
-        # (scalar enrichment + embedding, fused in one pass), which the
-        # concurrent page_stats write then reads warm.
-        manifest = io.commit(
-            cycle, tables, meta=meta,
-            warm=("lineage", "nd_bands", "ann_index"),
-        )
-        tick("commit writes")
+        # short tail. The handlers' warm names follow, for the same reason
+        # (corpus_handler's checkpoints feed more than one of its writes).
+        manifest = io.commit(cycle, tables, meta=meta, warm=tuple(warm))
 
         if cfg.use_seen_filter and build_filters:
             # filter sidecars are advisory: they only serve LATER cycles'
@@ -1319,12 +861,10 @@ class FrontierScheduler:
                 spark, io, cycle, cfg, consolidate=compact
             )
             manifest = io.commit_meta_update(cycle, meta_update)
-            tick("rebuild filters")
 
         # n_buckets rows: read back on the driver, not as a Spark job
         lin_rows = io.read_cycle_rows("lineage", cycle, schemas.LINEAGE)
         n_sched = sum(r["enqueued"] for r in lin_rows)
-        tick("read lineage")
 
         # tracked frames are released by run_cycle's finally
         return CycleResult(

@@ -104,19 +104,12 @@ class TableIO:
         # aggregates — measured from the real writes, no extra actions
         entry["write_secs"] = {}
 
-        _timing = os.environ.get("FRONTIER_TIMING") == "1"
-
         def write_one(item):
             name, (df, part) = item
             rel = f"{name}/cycle={cycle}"
             t0 = time.time()
             self._write_df(df, rel, part)
             entry["write_secs"][name] = round(time.time() - t0, 2)
-            if _timing:
-                print(
-                    f"    [commit {cycle}] {name}: {time.time() - t0:.1f}s",
-                    flush=True,
-                )
             return name, rel
 
         for name in warm:

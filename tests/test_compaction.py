@@ -67,27 +67,47 @@ def test_host_edges_and_nd_bands_compaction(
     (host_edges, nd_bands) compact on the same cadence as url_seen — rank
     builds and full-closure fallbacks read O(1) dirs, not O(cycles). The
     consolidated read must equal the raw delta union EXACTLY (multiset),
-    and the trace stays golden."""
+    and the trace stays golden. Both handlers (corpus, host graph) and the
+    core's own compaction run here, so the compacting cycle's one commit
+    must carry the tables of all three."""
     fix = FixtureConfig(n_urls=2000)
     cfg = dataclasses.replace(
         config_for_fixture(fix),
         compact_every=2,
         host_rank_every=1,
         enrich_pages=True,
+        ann_index=True,
+        ann_index_mode="ivf",
+        nd_closure_every=2,
     )
     work = str(tmp_path_factory.mktemp("engine-compact-edges"))
     eng = build_engine(spark, tiny_fixture_dir, work, cfg)
     eng.run(cycles=3)
 
     m2 = eng.io.manifest(2)
-    assert "host_edges_base" in m2["tables"]
-    assert "nd_bands_base" in m2["tables"]
+    assert {
+        # core
+        "pending", "url_seen", "scheduled", "discoveries", "lineage",
+        "resolved", "url_seen_base", "resolved_base",
+        # corpus handler
+        "page_stats", "nd_bands", "nd_components", "nd_buckets",
+        "ann_centroids", "ann_index", "nd_bands_base", "nd_buckets_base",
+        "ann_index_base",
+        # host graph handler
+        "host_edges", "host_rank", "host_edges_base",
+    } == set(m2["tables"])
+    assert m2["meta"]["nd_mode"] == "full"
+    assert m2["meta"]["ann_quantizer_cycle"] == 1
 
     for name, schema, key in (
         ("host_edges", schemas.HOST_EDGES,
          lambda r: (r["src_host"], r["dst_host"])),
         ("nd_bands", schemas.ND_BANDS,
          lambda r: (r["_id"], r["band"], r["bkey"])),
+        ("url_seen", schemas.URL_SEEN,
+         lambda r: (r["url_hash"], r["first_seen_cycle"])),
+        ("ann_index", schemas.ANN_INDEX,
+         lambda r: (r["url_hash"], r["cell"])),
     ):
         got = sorted(
             key(r)

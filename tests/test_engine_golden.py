@@ -1159,7 +1159,7 @@ def test_ann_index_consolidated_whole_corpus_golden(
 
     from frontier_engine import schemas
     from frontier_engine.corpus import ivf_probe_topk, ivf_route_py
-    from frontier_engine.scheduler import ANN_WRITE_SALT
+    from frontier_engine.handlers import ANN_WRITE_SALT
 
     fix = FixtureConfig(n_urls=2000)
     cfg = dataclasses.replace(

@@ -219,44 +219,6 @@ def test_empty_delta_cycle_does_not_crash_rebuild(spark, tmp_path):
     assert g.contains_many(np.arange(100, dtype=np.uint64)).all()
 
 
-def test_old_format_manifest_treated_as_no_build(spark, tmp_path):
-    """A pre-parquet-store manifest (meta has "filters" but no
-    "filters_buckets" — the round-2 .npz sidecar format, unreadable here)
-    must be skipped by filter_locations: treating it as a valid build would
-    set last_build while loc stays empty, so later rebuilds would only
-    cover deltas after it and URLs first seen at-or-before it could test
-    definitely-new (filter false negatives -> duplicate crawls)."""
-    from frontier_engine import membership, schemas
-    from frontier_engine.config import EngineConfig
-    from frontier_engine.tableio import TableIO
-
-    io = TableIO(str(tmp_path))
-    cfg = EngineConfig(n_buckets=4)
-
-    def seen_df(rows, cycle):
-        return spark.createDataFrame(
-            [(int(h), b, cycle) for h, b in rows], schemas.URL_SEEN
-        )
-
-    # cycle 1 committed by the OLD format: url_seen rows exist, manifest
-    # claims a filter build but carries no filters_buckets key
-    io.commit(1, {"url_seen": (seen_df([(h, 1) for h in range(100)], 1),
-                               ["host_bucket"])})
-    io.commit_meta_update(1, {"filters": 1})
-
-    last_build, loc = filter_locations(io, 1)
-    assert (last_build, loc) == (0, {})  # old build invisible -> no build
-
-    # the next rebuild therefore covers deltas from cycle 1, not cycle 2
-    io.commit(2, {"url_seen": (seen_df([(h, 1) for h in range(200, 250)], 2),
-                               ["host_bucket"])})
-    m2 = membership.rebuild_filters(spark, io, 2, cfg)
-    io.commit_meta_update(2, m2)
-    f = load_bucket_filter(io.root, 2, 1)
-    both = np.array(list(range(100)) + list(range(200, 250)), dtype=np.uint64)
-    assert f.contains_many(both).all()  # cycle-1 rows NOT missing
-
-
 def test_logical_carry_forward_no_copy(spark, tmp_path):
     """A bucket untouched at cycle 2 must NOT be rewritten: cycle 2's delta
     holds only the changed bucket, and filter_locations resolves the
@@ -312,13 +274,10 @@ def test_logical_carry_forward_no_copy(spark, tmp_path):
     assert g.contains_many(both).all()
 
 
-def test_mixed_era_store_poisons_until_full_rebuild(spark, tmp_path):
-    """Round-4 advice: a parquet delta build LAYERED on a legacy (.npz-era)
-    build may cover only its delta range, so a mixed-era store must not be
-    trusted at all — filter_locations returns (0, {}) (exact anti-join
-    everywhere), the next rebuild inserts from cycle 1 and marks itself
-    filters_full, and the store self-heals: after it, filter_locations
-    trusts entries again and stops the walk at the full build."""
+def test_from_scratch_build_is_full_and_ends_walk(spark, tmp_path):
+    """A build with no filter committed below it inserts every delta from
+    cycle 1 and marks itself filters_full; filter_locations then stops its
+    walk there, so an entry below a full build is never consulted."""
     from frontier_engine import membership, schemas
     from frontier_engine.config import EngineConfig
     from frontier_engine.tableio import TableIO
@@ -331,35 +290,21 @@ def test_mixed_era_store_poisons_until_full_rebuild(spark, tmp_path):
             [(int(h), b, cycle) for h, b in rows], schemas.URL_SEEN
         )
 
-    # cycle 1: legacy build (no filters_buckets); cycle 2: a parquet build
-    # layered on it (simulated: meta claims bucket 1 at cycle 2)
+    # cycle 1 commits url_seen without a filter build (a run's last cycle)
     io.commit(1, {"url_seen": (seen_df([(h, 1) for h in range(100)], 1),
                                ["host_bucket"])})
-    io.commit_meta_update(1, {"filters": 1})
     io.commit(2, {"url_seen": (seen_df([(h, 1) for h in range(200, 250)], 2),
                                ["host_bucket"])})
-    io.commit_meta_update(2, {"filters": 1, "filters_buckets": [1]})
+    m2 = membership.rebuild_filters(spark, io, 2, cfg)
+    assert m2.get("filters_full") is True
+    io.commit_meta_update(2, m2)
+    f = load_bucket_filter(io.root, 2, 1)
+    both = np.array(list(range(100)) + list(range(200, 250)), dtype=np.uint64)
+    assert f.contains_many(both).all()  # cycle-1 rows covered too
 
-    # poisoned: the layered entry above the legacy build is NOT trusted
-    assert filter_locations(io, 2) == (0, {})
-
-    # cycle 3 rebuild: prev_found == 0 -> inserts deltas 1..3, flags full
-    io.commit(3, {"url_seen": (seen_df([(h, 1) for h in range(300, 320)], 3),
-                               ["host_bucket"])})
-    m3 = membership.rebuild_filters(spark, io, 3, cfg)
-    assert m3.get("filters_full") is True
-    io.commit_meta_update(3, m3)
-
-    last_build, loc = filter_locations(io, 3)
-    assert last_build == 3 and loc.get(1) == 3  # healed, trusted again
-    f = load_bucket_filter(io.root, 3, 1)
-    allh = np.array(
-        list(range(100)) + list(range(200, 250)) + list(range(300, 320)),
-        dtype=np.uint64,
-    )
-    assert f.contains_many(allh).all()  # full history covered
-
-
+    # an entry below the full build (bucket 3 at cycle 1) is not reached
+    io.commit_meta_update(1, {"filters": 1, "filters_buckets": [3]})
+    assert filter_locations(io, 2) == (2, {1: 2})
 def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
     """More buckets than cores: the upsert and the consolidation carry run
     in defaultParallelism tasks, not one task per bucket, yet every
