@@ -57,13 +57,15 @@ class EngineConfig:
     # in the frontier are blocked by a pending anti-join instead (url_seen
     # is written at enqueue, not fetch). None = crawl-once (default).
     recrawl_after_cycles: int | None = None
-    # derive politeness_salt and salt_factor PER CYCLE from observed bucket
-    # skew instead of the static values above: the previous cycle's lineage
-    # (n_buckets rows, already committed) gives per-bucket enqueued counts;
-    # a bucket holding >= 2x the mean turns salting on, sized next_pow2 of
-    # the skew ratio (cap 16). Purely physical — the two-phase window and
-    # the salted queue write are exact for ANY salt, so the auto choice can
-    # never change results (pinned by the skew golden).
+    # derive politeness_salt and salt_factor PER CYCLE from observed host
+    # skew instead of the static values above: the previous cycle's
+    # manifest meta records the hottest host's depth and the eligible
+    # frontier's total (host_depth_max / host_depth_total); salting turns
+    # on when that host holds >= 10% of the frontier AND its depth is
+    # >= 8 x default_budget, sized next_pow2(share * 32) (cap 16).
+    # Purely physical — the two-phase window and the salted queue write
+    # are exact for ANY salt, so the auto choice can never change results
+    # (pinned by the skew golden).
     auto_salt: bool = False
     # commit a per-cycle page_stats table (corpus.enrich over the cycle's
     # successfully fetched pages: fingerprint / quality / token counts /

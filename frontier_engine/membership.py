@@ -14,20 +14,24 @@ implied by sqlite ROWID monotonicity + the last_row checkpoint). Semantics:
   membership stays exactly reproducible (BASELINE.json:2);
 - filters are maintained INCREMENTALLY: each cycle's url_seen delta is
   inserted into the bucket's previous filter inside a streamed
-  ``mapInPandas`` task (data repartitioned by host_bucket — the same
+  ``mapInPandas`` task that owns the whole bucket (the same
   exclusive-ownership sharding as the reference's per-container workers);
-- a cold bucket (no filter row yet, or a cuckoo filter that overflowed) is
-  rebuilt from the bucket's FULL url_seen as a bloom filter — fully
-  vectorized numpy, no per-item loop — per the north star's "bloom fallback
-  for cold partitions";
+  a bucket with no previous row gets a fresh filter from its files;
+- a bucket whose previous row is expected but unreadable (a crashed
+  consolidation pruned it), or whose cuckoo filter overflowed, is rebuilt
+  from its FULL url_seen as a bloom filter — fully vectorized numpy, no
+  per-item loop — per the north star's "bloom fallback for cold
+  partitions" (``_bucket_row`` is the one rule);
 - carry-forward is LOGICAL, not physical: each cycle's ``filters`` delta
   holds only the buckets whose url_seen changed; the driver derives a tiny
   ``bucket -> newest delta cycle`` map from manifest metadata
   (``filter_locations``) and ships it into the prefilter closure, so an
   untouched bucket keeps serving its old row with zero bytes copied;
-- staleness is safe: if the newest filter build lags the newest url_seen
-  delta, the scheduler exact-joins "definite new" candidates against the
-  missing delta range (scheduler.py split_by_filter call site).
+- a lagging filter is safe: if the newest filter build is older than the
+  newest url_seen delta (a run's last cycle skips the build), the
+  scheduler exact-joins "definite new" candidates against the missing
+  delta range (``split_by_filter``), and the next build inserts every
+  delta since the previous rows.
 
 All bit-twiddling is numpy-vectorized for lookups and bloom builds; only the
 cuckoo insert path walks items (it touches only the small per-cycle delta).
@@ -261,39 +265,49 @@ def load_bucket_filter(root: str, cycle: int, bucket: int,
                        writable: bool = False):
     """Read one bucket's filter row from the cycle's parquet delta. The
     delta is hive-partitioned by host_bucket, so the read opens EXACTLY the
-    bucket's own file(s) via the directory layout — no dataset discovery
+    bucket's own file via the directory layout — no dataset discovery
     over every bucket's files per call (that discovery was a measured 5x
     slowdown of the prefilter stage). Returns None if the bucket has no
-    usable row (overflow marker rows carry data=NULL)."""
-    import glob as _glob
-
+    row at that cycle (never written, or its dir was pruned)."""
     import pyarrow.parquet as _pq
 
-    files = sorted(
-        _glob.glob(
-            os.path.join(
-                _cycle_dir(root, cycle), "stage=*",
-                f"host_bucket={bucket}", "*.parquet",
-            )
-        )
-    )
+    files = _bucket_files([_cycle_dir(root, cycle)], bucket)
     if not files:
         return None
-    # Correctness here relies on SKIPPING data=NULL marker rows (overflow
-    # markers from stage=upsert carry data=NULL), NOT on file sort order —
-    # the sorted glob actually puts stage=bloom BEFORE stage=upsert
-    # ('b' < 'u'), so a usable bloom row wins over a later NULL marker.
-    for f in files:
-        t = _pq.read_table(f, columns=["kind", "n_bits", "data"])
-        for i in range(t.num_rows):
-            if t["data"][i].is_valid:
-                return filter_from_row(
-                    str(t["kind"][i]),
-                    t["n_bits"][i].as_py(),
-                    t["data"][i].as_py(),
-                    writable=writable,
-                )
-    return None
+    t = _pq.read_table(files[0], columns=["kind", "n_bits", "data"])
+    return filter_from_row(
+        str(t["kind"][0]),
+        t["n_bits"][0].as_py(),
+        t["data"][0].as_py(),
+        writable=writable,
+    )
+
+
+def _bucket_files(dirs: list, bucket: int) -> list:
+    """One bucket's parquet files under hive-partitioned dirs, in dir
+    order (sorted within each dir: cuckoo inserts are order-sensitive,
+    so every build streams a bucket's rows in the same order)."""
+    import glob as _glob
+
+    return [
+        f
+        for d in dirs
+        for f in sorted(
+            _glob.glob(os.path.join(d, f"host_bucket={bucket}", "*.parquet"))
+        )
+    ]
+
+
+def _listed_buckets(dirs: list) -> set:
+    """The buckets with a ``host_bucket=`` dir under any of ``dirs`` — a
+    directory listing, no file opened."""
+    import glob as _glob
+
+    return {
+        int(p.rsplit("host_bucket=", 1)[1])
+        for d in dirs
+        for p in _glob.glob(os.path.join(d, "host_bucket=*"))
+    }
 
 
 def filter_locations(io, through_cycle: int):
@@ -446,51 +460,129 @@ _FILTER_ROW_SCHEMA_DDL = (
 _ROW_COLS = ["host_bucket", "kind", "n_bits", "status", "data"]
 
 
-def _bucket_rows(spark, **cols: list):
-    """INT rows from equal-length driver lists (row i holds every list's
-    i-th value), packed into ``min(n, defaultParallelism)`` tasks:
-    ``range`` indexes array literals, so the frame needs no Python-built
-    RDD (a job through Python workers) and no round-robin shuffle — the
-    row IS the bucket, any task assignment is correct. Packing spares a
-    Python task per bucket beyond the core count; the consumers yield one
-    frame per bucket, so a task still holds one serialized filter at a
-    time, and each bucket still lands in exactly one task (one file per
-    ``host_bucket=`` dir)."""
+def _bucket_rows(spark, buckets: list):
+    """One INT ``host_bucket`` row per bucket, packed into
+    ``min(n, defaultParallelism)`` tasks: ``range`` indexes an array
+    literal, so the frame needs no Python-built RDD (a job through Python
+    workers) and no round-robin shuffle — the row IS the bucket, any task
+    assignment is correct. Packing spares a Python task per bucket beyond
+    the core count; the consumer yields one frame per bucket, so a task
+    still holds one serialized filter at a time, and each bucket still
+    lands in exactly one task (one file per ``host_bucket=`` dir)."""
     from pyspark.sql import functions as F
 
-    n = len(next(iter(cols.values())))
-    idx = (F.col("id") + 1).cast("int")
+    n = len(buckets)
     par = min(n, spark.sparkContext.defaultParallelism)
-    return spark.range(n, numPartitions=max(1, par)).select(*(
-        F.element_at(F.array(*(F.lit(int(v)) for v in vals)), idx)
+    return spark.range(n, numPartitions=max(1, par)).select(
+        F.element_at(
+            F.array(*(F.lit(int(b)) for b in buckets)),
+            (F.col("id") + 1).cast("int"),
+        )
         .cast("int")
-        .alias(name)
-        for name, vals in cols.items()
-    ))
+        .alias("host_bucket")
+    )
+
+
+def _insert_files(f, files: list) -> bool:
+    """Stream the files' url_hash column into ``f`` in row-group batches;
+    False as soon as a cuckoo insert overflows.
+
+    Skips hashes the filter already reports present: in recrawl-TTL mode
+    the same url_hash writes a fresh url_seen delta row per recrawl, and
+    duplicate cuckoo inserts consume fresh slots — after ~2*_SLOTS
+    recrawls of a hot URL the bucket would overflow into a full-history
+    bloom. Skipping is sound with no deletion support: a "present" answer
+    never needs reinforcing (and a bloom insert of a present hash sets no
+    new bit)."""
+    import pyarrow.parquet as _pq
+
+    for path in files:
+        for rb in _pq.ParquetFile(path).iter_batches(
+            columns=["url_hash"], batch_size=1 << 16
+        ):
+            h = (
+                rb.column(0)
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64)
+                .view(np.uint64)
+            )
+            fresh = ~f.contains_many(h)
+            if fresh.any() and not f.insert_many(h[fresh]):
+                return False
+    return True
+
+
+def _row_count(files: list) -> int:
+    """Rows in parquet files, from their footers (no data read)."""
+    import pyarrow.parquet as _pq
+
+    return sum(_pq.ParquetFile(p).metadata.num_rows for p in files)
+
+
+def _bucket_row(root: str, bucket: int, prev_cycle, delta_dirs: list,
+                full_dirs: list) -> dict:
+    """Build one bucket's filter row (executor side) — the one rule every
+    row of ``rebuild_filters`` is built by:
+
+    - ``prev_cycle`` None (no previous row expected): a fresh filter from
+      the delta files — a cuckoo sized 4x their rows up to
+      _CUCKOO_MAX_ITEMS, else a bloom;
+    - the previous row loads: the delta files are inserted into it (none
+      for a consolidation carry, whose bytes are then copied unchanged);
+    - the previous row does not load (a crashed consolidation pruned it),
+      or the cuckoo overflows: a bloom over the bucket's FULL url_seen,
+      sized by its files' footer row counts."""
+    delta = _bucket_files(delta_dirs, bucket)
+    if prev_cycle is None:
+        n = _row_count(delta)
+        if n <= _CUCKOO_MAX_ITEMS:
+            f = CuckooFilter.with_capacity(max(n * 4, 1024))
+        else:
+            f = BloomFilter.with_capacity(n)
+    else:
+        f = load_bucket_filter(root, prev_cycle, bucket, writable=bool(delta))
+    status = "ok" if delta else "carried"
+    if f is None or not _insert_files(f, delta):
+        full = _bucket_files(full_dirs, bucket)
+        f = BloomFilter.with_capacity(_row_count(full))
+        _insert_files(f, full)
+        status = "bloom"
+    r = f.to_row()
+    r["host_bucket"] = bucket
+    r["status"] = status
+    return r
 
 
 def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> dict:
     """Maintain per-bucket filter rows for the url_seen set through `cycle`.
 
-    Incremental: insert this cycle's delta into the bucket's previous filter
-    row. Cold/overflowed buckets rebuild from the bucket's full url_seen
-    (bloom). Untouched buckets carry forward LOGICALLY (filter_locations) —
-    nothing is copied. Returns the manifest meta update:
+    One rule per bucket, for every bucket whose url_seen changed since the
+    previous filter rows (plus, when ``consolidate``, every bucket those
+    rows cover), run in one packed ``mapInPandas`` task kind and written
+    once to ``filters/cycle=<k>/host_bucket=<b>/`` (``_bucket_row``):
+
+    - no previous row expected: a fresh filter from the bucket's files;
+    - previous row expected and readable: the new delta files are inserted
+      into it (a carried bucket has none, so its bytes are copied);
+    - previous row expected but unreadable, or a cuckoo that overflows: a
+      bloom over the bucket's FULL url_seen.
+
+    Untouched buckets carry forward LOGICALLY (filter_locations) — nothing
+    is copied. Returns the manifest meta update:
     {"filters": total buckets covered, "filters_buckets": written this cycle}.
 
     ``consolidate`` (the filters analog of url_seen_base compaction, run on
-    the same cadence): physically re-emit every untouched bucket's row into
-    THIS cycle's delta (a parallel copy of the serialized bytes — filters
-    are not rebuilt), then delete all older filters/cycle dirs. Without it
-    the logical carry-forward pins arbitrarily old delta dirs forever.
-    Crash-safe: filters are advisory — a reader chasing a stale manifest
-    into a pruned dir gets None, classifies the bucket maybe-seen, and the
-    exact anti-join confirms (correctness never depends on a filter).
+    the same cadence): re-emit every untouched bucket's row into THIS
+    cycle's delta, then delete all older filters/cycle dirs. Without it the
+    logical carry-forward pins arbitrarily old delta dirs forever.
+    Crash-safe: a consolidation that dies after the prune but before its
+    manifest update leaves the previous manifest pointing at pruned rows.
+    A reader gets None for them and classifies the bucket maybe-seen (the
+    exact anti-join confirms); the next build finds the expected row
+    unreadable and rebuilds the bucket from its full url_seen, so no
+    bucket's older history is lost.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from . import schemas
 
     prev_found, prev_loc = filter_locations(io, cycle - 1)
     root = io.root
@@ -501,246 +593,60 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     # several cycles; building from read_cycle(cycle) alone would leave the
     # intervening deltas permanently missing from all later filters and
     # misclassify seen URLs as definitely-new (duplicate url_seen rows).
-    # A from-scratch build (no filter committed yet) reads
-    # the CONSOLIDATED view instead: base + O(compact_every) tail dirs —
-    # the same row set as unioning every delta dir since cycle 1, without
-    # the O(cycles) dir-union pathology compaction exists to prevent.
+    # A from-scratch build (no filter committed yet) reads the CONSOLIDATED
+    # view instead: base + O(compact_every) tail dirs — the same row set as
+    # unioning every delta dir since cycle 1, without the O(cycles)
+    # dir-union pathology compaction exists to prevent.
     #
     # CO-LOCATE instead of shuffle (guide §8): url_seen is committed
-    # hive-partitioned by host_bucket, so the insert source is already
-    # laid out one-file-per-bucket on disk. The old path re-shuffled the
-    # whole delta (a full-frontier Exchange + Arrow boundary per cycle)
-    # only to regroup rows the write had ALREADY grouped; instead the
-    # driver lists each bucket's files from the committed dirs (manifest
-    # walk + footer metadata, no Spark job — this also replaces the
-    # fresh-capacity count-agg job with parquet row counts) and each task
-    # streams its buckets' files' row groups straight into the filters,
-    # one bucket at a time. Split-safety is by construction: a task owns
-    # whole buckets, never a byte range of one.
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
+    # hive-partitioned by host_bucket, so the source is already laid out
+    # one-dir-per-bucket on disk. The driver ships only the dir lists and
+    # lists the touched buckets (no file opened, no Spark job); each task
+    # globs its buckets' files and streams their row groups straight into
+    # the filters, one bucket at a time. Split-safety is by construction:
+    # a task owns whole buckets, never a byte range of one.
+    full_dirs = io.appended_dirs("url_seen", cycle)
     if prev_found == 0:
-        dirs = io.appended_dirs("url_seen", cycle)
+        delta_dirs = full_dirs
     else:
-        dirs = io.delta_range_dirs("url_seen", prev_found + 1, cycle)
-    files_by_bucket: dict = {}
-    cap: dict = {}
-    for d in dirs:
-        for f in sorted(
-            _glob.glob(os.path.join(d, "host_bucket=*", "*.parquet"))
-        ):
-            b = int(f.split("host_bucket=")[1].split(os.sep)[0])
-            files_by_bucket.setdefault(b, []).append(f)
-            cap[b] = cap.get(b, 0) + _pq.ParquetFile(f).metadata.num_rows
-    out_schema = T.StructType.fromDDL(_FILTER_ROW_SCHEMA_DDL)
+        delta_dirs = io.delta_range_dirs("url_seen", prev_found + 1, cycle)
+    buckets = _listed_buckets(delta_dirs)
+    if consolidate:
+        buckets |= set(prev_loc)
 
-    def upsert_batches(batches):
-        import numpy as _np
+    def bucket_batches(batches):
         import pandas as _pd
-        import pyarrow.parquet as _apq
 
         # one frame per bucket: a packed task holds one filter at a time
         for pdf in batches:
             for b in pdf["host_bucket"]:
-                b = int(b)
-                f = None
-                pc = prev_loc.get(b)
-                if pc is not None:
-                    f = load_bucket_filter(root, pc, b, writable=True)
-                if f is None:
-                    n = cap.get(b, 0)
-                    if n <= _CUCKOO_MAX_ITEMS:
-                        f = CuckooFilter.with_capacity(max(n * 4, 1024))
-                    else:
-                        f = BloomFilter.with_capacity(n)
-                ok = True
-                for path in files_by_bucket[b]:
-                    pf = _apq.ParquetFile(path)
-                    for rb in pf.iter_batches(
-                        columns=["url_hash"], batch_size=1 << 16
-                    ):
-                        # skip hashes the filter already reports present:
-                        # in recrawl-TTL mode the same url_hash writes a
-                        # fresh url_seen delta row per recrawl, and
-                        # duplicate cuckoo inserts consume fresh slots —
-                        # after ~2*_SLOTS recrawls of a hot URL the bucket
-                        # would overflow into a full-history bloom
-                        # rebuild. Skipping is sound with no deletion
-                        # support: a "present" answer never needs
-                        # reinforcing.
-                        h = (
-                            rb.column(0)
-                            .to_numpy(zero_copy_only=False)
-                            .astype(_np.int64)
-                            .view(_np.uint64)
-                        )
-                        fresh = ~f.contains_many(h)
-                        if fresh.any():
-                            ok = f.insert_many(h[fresh])
-                            if not ok:
-                                break
-                    if not ok:
-                        break
-                r = (
-                    f.to_row()
-                    if ok
-                    else {"kind": None, "n_bits": None, "data": None}
+                r = _bucket_row(
+                    root, int(b), prev_loc.get(int(b)), delta_dirs, full_dirs
                 )
-                r["host_bucket"] = b
-                r["status"] = "ok" if ok else "overflow"
-                f = None
                 yield _pd.DataFrame([r], columns=_ROW_COLS)
 
-    touched = sorted(files_by_bucket)
-    upsert_df = _bucket_rows(spark, host_bucket=touched).mapInPandas(
-        upsert_batches, out_schema
-    )
-    rel = f"filters/cycle={cycle}/stage=upsert"
+    rel = f"filters/cycle={cycle}"
     # hive-partition by host_bucket (each bucket in one task -> one file
     # per bucket dir); readers then open exactly their bucket's file
-    io._write_df(upsert_df, rel, ["host_bucket"])
-    # Status read-back: driver-side pyarrow over the per-bucket files'
-    # status column only — NOT a Spark job (the round-3 spark.read +
-    # collect here was a whole extra job per cycle, ~0.3-0.5 s of the
-    # headline regression; the driver touches the same n_buckets tiny
-    # footers either way). An EMPTY url_seen delta (saturated frontier /
-    # all-dup discoveries) writes no parquet files at all — the glob then
-    # yields no statuses and the carry-forward below still applies, which
-    # is also what keeps this path crash-free where a schema-inferring
-    # Spark read would raise UNABLE_TO_INFER_SCHEMA.
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    def stage_statuses(stage_rel: str) -> dict:
-        """{bucket: [status, ...]} actually ON DISK for a stage dir —
-        driver-side pyarrow over the status column only, never a Spark
-        job. What got written is always derived from this read-back,
-        never assumed from what was submitted."""
-        out: dict = {}
-        for f in sorted(
-            _glob.glob(
-                os.path.join(root, stage_rel, "host_bucket=*", "*.parquet")
-            )
-        ):
-            b = int(f.split("host_bucket=")[1].split(os.sep)[0])
-            t = _pq.read_table(f, columns=["status"])
-            for i in range(t.num_rows):
-                out.setdefault(b, []).append(str(t["status"][i]))
-        return out
-
-    def full_rebuild(buckets: list, stage: str) -> set:
-        """Rebuild the given buckets' filters from their FULL url_seen
-        (bloom) into ``stage``; returns the buckets that actually got a
-        row (a bucket with no url_seen rows writes none — correctly
-        uncovered)."""
-        full = io.read_appended(spark, "url_seen", cycle, schemas.URL_SEEN)
-        full = full.where(full.host_bucket.isin(buckets))
-        full_cap = {
-            int(r["host_bucket"]): int(r["n"])
-            for r in full.groupBy("host_bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-
-        def rebuild_batches(batches):
-            import pandas as _pd
-            import numpy as _np
-
-            blooms: dict = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                h_all = (
-                    pdf["url_hash"].to_numpy().astype(_np.int64).view(_np.uint64)
-                )
-                for b, idx in pdf.groupby("host_bucket").indices.items():
-                    b = int(b)
-                    f = blooms.get(b)
-                    if f is None:
-                        f = blooms[b] = BloomFilter.with_capacity(full_cap[b])
-                    f.insert_many(h_all[idx])
-            rows = []
-            for b, f in blooms.items():
-                r = f.to_row()
-                r["host_bucket"] = b
-                r["status"] = "bloom"
-                rows.append(r)
-            yield _pd.DataFrame(rows, columns=_ROW_COLS)
-
-        bloom_df = (
-            full.select("host_bucket", "url_hash")
-            .repartition(cfg.n_buckets, "host_bucket")
-            .mapInPandas(rebuild_batches, out_schema)
-        )
-        stage_rel = f"filters/cycle={cycle}/stage={stage}"
-        io._write_df(bloom_df, stage_rel, ["host_bucket"])
-        return set(stage_statuses(stage_rel))
-
-    written: set = set()
-    overflow: list = []
-    for b, sts in stage_statuses(rel).items():
-        written.add(b)
-        if "overflow" in sts:
-            overflow.append(b)
-
-    if overflow:
-        full_rebuild(sorted(overflow), "bloom")
+    io._write_df(
+        _bucket_rows(spark, sorted(buckets)).mapInPandas(
+            bucket_batches, T.StructType.fromDDL(_FILTER_ROW_SCHEMA_DDL)
+        ),
+        rel,
+        ["host_bucket"],
+    )
+    # what got written is read back from the layout, never assumed from
+    # what was submitted
+    written = _listed_buckets([os.path.join(root, rel)])
 
     if consolidate:
-        carry = sorted(
-            (b, c) for b, c in prev_loc.items() if b not in written
-        )
-        if carry:
-            carry_df = _bucket_rows(
-                spark,
-                host_bucket=[b for b, _ in carry],
-                src_cycle=[c for _, c in carry],
-            )
-
-            def copy_batches(batches):
-                import pandas as _pd
-
-                for pdf in batches:
-                    for b, c in zip(pdf["host_bucket"], pdf["src_cycle"]):
-                        f = load_bucket_filter(root, int(c), int(b))
-                        if f is None:
-                            continue
-                        r = f.to_row()
-                        r["host_bucket"] = int(b)
-                        r["status"] = "carried"
-                        f = None
-                        yield _pd.DataFrame([r], columns=_ROW_COLS)
-
-            carry_rel = f"filters/cycle={cycle}/stage=carry"
-            io._write_df(
-                carry_df.mapInPandas(copy_batches, out_schema),
-                carry_rel,
-                ["host_bucket"],
-            )
-            # record only what the copy ACTUALLY wrote — copy_batches
-            # skips a bucket whose source row is unreadable (e.g. a prior
-            # consolidation crashed mid-prune), and blindly adding it to
-            # `written` would publish a filters_full manifest claiming a
-            # row that the dir-prune below then deletes the only copy of,
-            # leaving the bucket filterless-but-covered forever. Any
-            # skipped bucket is instead rebuilt from its full url_seen
-            # before the prune.
-            carry_ok = set(stage_statuses(carry_rel))
-            missing = sorted({b for b, _ in carry} - carry_ok)
-            if missing:
-                carry_ok |= full_rebuild(missing, "carryfix")
-            written |= carry_ok
         # older dirs now redundant: every live bucket has a row at `cycle`
         import shutil as _shutil
 
         fdir = os.path.join(root, "filters")
-        if os.path.isdir(fdir):
-            for n in os.listdir(fdir):
-                if n.startswith("cycle=") and int(n.split("=")[1]) < cycle:
-                    _shutil.rmtree(os.path.join(fdir, n), ignore_errors=True)
+        for n in os.listdir(fdir):
+            if n.startswith("cycle=") and int(n.split("=")[1]) < cycle:
+                _shutil.rmtree(os.path.join(fdir, n), ignore_errors=True)
         # consolidation leaves every live bucket with a row at this cycle:
         # a full snapshot
         return {

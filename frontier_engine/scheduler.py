@@ -378,8 +378,8 @@ class FrontierScheduler:
         ttl = cfg.recrawl_after_cycles
         if ttl is not None:
             lo = max(1, cycle - ttl + 1)
-            seen = io.read_appended_since(
-                spark, "url_seen", cycle - 1, lo, schemas.URL_SEEN
+            seen = io.read_appended(
+                spark, "url_seen", cycle - 1, schemas.URL_SEEN, since=lo
             ).where(F.col("first_seen_cycle") >= lo)
         else:
             seen = io.read_appended(
@@ -457,32 +457,27 @@ class FrontierScheduler:
         # rows of one url_hash share a filter classification (same hash,
         # same filter answer), so per-branch aggregation equals aggregating
         # before the split, row for row.
-        tested_frame = None
         if fresh_start:
             # provably empty seen-set: every grouped candidate is new
             new_keys = _dedup_g(cand)
-        elif cfg.use_seen_filter:
-            from .membership import split_by_filter
+        else:
+            tested_frame = None
+            if cfg.use_seen_filter:
+                from .membership import split_by_filter
 
-            definite_new, maybe_seen, tested_frame = split_by_filter(
-                cand, io, cycle - 1, cfg
-            )
-            if tested_frame is not None:  # checkpointed inside
-                # split_by_filter; None when no filter shard exists yet
-                # (e.g. the previous cycle ran with build_filters=False and
-                # none were ever committed) — appending None would crash
-                # the finally
+                definite_new, maybe_seen, tested_frame = split_by_filter(
+                    cand, io, cycle - 1, cfg
+                )
+            if tested_frame is not None:  # checkpointed in split_by_filter
                 tracked.append(tested_frame)
                 confirmed_new = _dedup_g(maybe_seen).join(
                     seen, "url_hash", "left_anti"
                 )
                 new_keys = _dedup_g(definite_new).unionByName(confirmed_new)
             else:
-                # no filter shard exists yet: split_by_filter returned
-                # (empty, cand, None) — single agg + exact anti-join
+                # filter off, or no filter rows committed yet: a single
+                # agg + exact anti-join
                 new_keys = _dedup_g(cand).join(seen, "url_hash", "left_anti")
-        else:
-            new_keys = _dedup_g(cand).join(seen, "url_hash", "left_anti")
 
         if ttl is not None and not fresh_start:
             # TTL mode: an expired seen row must not re-admit a URL that is

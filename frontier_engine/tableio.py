@@ -201,19 +201,34 @@ class TableIO:
             schema=to_arrow_schema(schema),
         ).to_table().to_pylist()
 
-    def appended_dirs(self, name: str, through_cycle: int) -> list[str]:
+    def appended_dirs(
+        self, name: str, through_cycle: int, since: int = 1
+    ) -> list[str]:
         """Committed dirs of an append table through cycle k (newest base
         ≤ k, then the deltas after it) — the path walk behind
         ``read_appended``, exposed so metadata-driven consumers (e.g. the
-        per-bucket filter build) can reach the files without a Spark scan."""
+        per-bucket filter build) can reach the files without a Spark scan.
+
+        ``since`` restricts the walk to dirs that can hold rows written at
+        cycle >= since. The delta of cycle j holds exclusively rows
+        stamped j, so deltas before ``since`` are skipped wholesale, and
+        so is a consolidated base older than ``since`` (it can only hold
+        rows stamped <= its own cycle). A base AT OR AFTER ``since`` is
+        included whole — it folds older rows in, so callers must still
+        filter on the row's cycle column. This is the recrawl-TTL scan
+        path: the per-cycle blocking set reads O(ttl) cycle dirs instead
+        of the full 10^10-row seen history."""
         paths = []
-        start = 1
+        start = since
         base_name = f"{name}_base"
         for c in range(through_cycle, 0, -1):
             m = self.manifest(c)
             if m and base_name in m["tables"]:
-                paths.append(os.path.join(self.root, m["tables"][base_name]))
-                start = c + 1
+                if c >= since:
+                    paths.append(
+                        os.path.join(self.root, m["tables"][base_name])
+                    )
+                    start = c + 1
                 break
         for c in range(start, through_cycle + 1):
             m = self.manifest(c)
@@ -221,11 +236,14 @@ class TableIO:
                 paths.append(os.path.join(self.root, m["tables"][name]))
         return paths
 
-    def read_appended(self, spark, name: str, through_cycle: int, schema):
+    def read_appended(
+        self, spark, name: str, through_cycle: int, schema, since: int = 1
+    ):
         """Union of committed deltas of an append table up to cycle k,
-        starting from the most recent consolidated base ≤ k (if any)."""
+        starting from the most recent consolidated base ≤ k (if any);
+        ``since`` as in ``appended_dirs``."""
         return self._union_paths(
-            spark, self.appended_dirs(name, through_cycle), schema
+            spark, self.appended_dirs(name, through_cycle, since), schema
         )
 
     def _union_paths(self, spark, paths, schema):
@@ -239,37 +257,6 @@ class TableIO:
         for d in dfs[1:]:
             out = out.unionByName(d)
         return out
-
-    def read_appended_since(
-        self, spark, name: str, through_cycle: int, from_cycle: int, schema
-    ):
-        """read_appended restricted to rows written at cycle >= from_cycle.
-
-        Exploits the append-table layout: the delta of cycle j contains
-        exclusively rows stamped j, so deltas before from_cycle are skipped
-        wholesale, and a consolidated base older than from_cycle (which can
-        only hold rows stamped <= its own cycle) is skipped too. A base AT
-        OR AFTER from_cycle is included whole — it folds older rows in, so
-        callers must still filter on the row's cycle column. This is the
-        recrawl-TTL scan path: the per-cycle blocking set reads O(ttl)
-        cycle dirs instead of the full 10^10-row seen history."""
-        paths = []
-        start = max(1, from_cycle)
-        base_name = f"{name}_base"
-        for c in range(through_cycle, 0, -1):
-            m = self.manifest(c)
-            if m and base_name in m["tables"]:
-                if c >= from_cycle:
-                    paths.append(
-                        os.path.join(self.root, m["tables"][base_name])
-                    )
-                    start = c + 1
-                break
-        for c in range(max(start, from_cycle), through_cycle + 1):
-            m = self.manifest(c)
-            if m and name in m["tables"]:
-                paths.append(os.path.join(self.root, m["tables"][name]))
-        return self._union_paths(spark, paths, schema)
 
     def delta_range_dirs(
         self, name: str, from_cycle: int, to_cycle: int

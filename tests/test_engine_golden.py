@@ -141,7 +141,7 @@ def test_recrawl_ttl_golden(spark, tiny_fixture_dir, tmp_path_factory):
 
     fix = FixtureConfig(n_urls=2000)
     # compact_every=2 forces url_seen_base consolidations inside the run,
-    # so the TTL scan path hits BOTH read_appended_since branches: a base
+    # so the TTL scan path (read_appended since=) hits BOTH branches: a base
     # at/after the window start (included + residual-filtered) and a base
     # older than it (skipped wholesale, deltas only)
     cfg = dataclasses.replace(
@@ -497,6 +497,55 @@ def test_consolidation_resume_golden(
     st = spark_trace(spark, eng2.io, range(1, 4))
     st_plain, _, _, _ = golden
     assert diff_traces(st, st_plain) == []
+
+
+def test_filter_consolidation_crash_resume_golden(
+    spark, tiny_fixture_dir, tmp_path_factory, monkeypatch
+):
+    """A filter consolidation that dies after pruning the older filter
+    dirs but before its manifest update (cycle 2 of a compact_every=2
+    run) leaves cycle 1's manifest naming pruned rows. A fresh scheduler
+    resumed from there must reproduce the refspec trace through cycle 6:
+    the next build rebuilds each such bucket from its full url_seen, so no
+    seen URL of cycle 1 is later classified "definitely new"."""
+    import dataclasses
+    import os as _os
+
+    from frontier_engine.tableio import TableIO
+
+    fix = FixtureConfig(n_urls=2000)
+    cfg = dataclasses.replace(config_for_fixture(fix), compact_every=2)
+    work = str(tmp_path_factory.mktemp("engine-consol-crash"))
+    eng = build_engine(spark, tiny_fixture_dir, work, cfg)
+    eng.run_cycle(1)
+
+    real_update = TableIO.commit_meta_update
+
+    def crash_at_2(self, cycle, meta_update):
+        if cycle == 2:
+            raise RuntimeError("killed before the filter manifest update")
+        return real_update(self, cycle, meta_update)
+
+    with monkeypatch.context() as m:
+        m.setattr(TableIO, "commit_meta_update", crash_at_2)
+        with pytest.raises(RuntimeError, match="killed before"):
+            eng.run_cycle(2)
+    # the crash hit after the prune: cycle 1's rows are gone, yet cycle 2's
+    # manifest (committed before the build) carries no filter meta
+    fdir = _os.path.join(work, "filters")
+    assert sorted(_os.listdir(fdir)) == ["cycle=2"]
+    assert "filters" not in eng.io.manifest(2).get("meta", {})
+
+    eng2 = build_engine(spark, tiny_fixture_dir, work, cfg)
+    assert eng2.io.latest_cycle() == 2
+    for k in range(3, 7):
+        eng2.run_cycle(k, build_filters=k < 6)
+
+    st = spark_trace(spark, eng2.io, range(1, 7))
+    pages, seeds, robots = read_fixture_rows(tiny_fixture_dir)
+    rt = ref_trace(run(pages, seeds, robots, cfg, cycles=6))
+    probs = diff_traces(st, rt)
+    assert probs == [], "\n".join(probs)
 
 
 def test_orphan_dirs_from_crashed_commit_ignored(

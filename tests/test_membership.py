@@ -119,6 +119,12 @@ def test_forced_overflow_rebuilds_bloom(spark, tmp_path):
         list(range(1000, 1100)) + list(range(50_000, 70_000)), dtype=np.uint64
     )
     assert f2.contains_many(h).all()  # no false negatives, ever
+    # the bloom is sized by the bucket's full url_seen row count, and its
+    # bits are the order-free OR of every hash: the same bytes as a bloom
+    # built directly over both cycles' rows
+    want = BloomFilter.with_capacity(len(h))  # 20,100 rows
+    want.insert_many(h)
+    assert (f2.n_bits, f2.to_row()["data"]) == (want.n_bits, want.to_row()["data"])
 
 
 def test_consolidation_rewrites_and_prunes(spark, tmp_path):
@@ -172,6 +178,64 @@ def test_consolidation_rewrites_and_prunes(spark, tmp_path):
     assert f1.contains_many(both).all()
     f2 = load_bucket_filter(io.root, 2, 2)
     assert f2.contains_many(np.arange(500, 600, dtype=np.uint64)).all()
+
+
+def test_pruned_source_row_rebuilt_from_full_history(spark, tmp_path):
+    """A consolidation that dies after pruning the older filter dirs but
+    before its manifest update leaves cycle 1's manifest pointing at
+    pruned rows. The next build must not treat such a bucket as new and
+    build it from the delta alone (its older history would read as
+    "definitely new"): a previous row that is expected but unreadable is
+    rebuilt as a bloom over the bucket's FULL url_seen."""
+    import os as _os
+
+    from frontier_engine import membership, schemas
+    from frontier_engine.config import EngineConfig
+    from frontier_engine.tableio import TableIO
+
+    io = TableIO(str(tmp_path))
+    cfg = EngineConfig(n_buckets=4)
+
+    def seen_df(rows, cycle):
+        return spark.createDataFrame(
+            [(int(h), b, cycle) for h, b in rows], schemas.URL_SEEN
+        )
+
+    io.commit(
+        1,
+        {
+            "url_seen": (
+                seen_df([(h, 1) for h in range(100)]
+                        + [(h, 2) for h in range(500, 600)], 1),
+                ["host_bucket"],
+            )
+        },
+    )
+    io.commit_meta_update(1, membership.rebuild_filters(spark, io, 1, cfg))
+
+    # cycle 2 consolidates, then "crashes": no commit_meta_update
+    io.commit(
+        2, {"url_seen": (seen_df([(h, 1) for h in range(200, 250)], 2),
+                         ["host_bucket"])}
+    )
+    membership.rebuild_filters(spark, io, 2, cfg, consolidate=True)
+    assert not _os.path.isdir(_os.path.join(io.root, "filters", "cycle=1"))
+    assert filter_locations(io, 2) == (1, {1: 1, 2: 1})  # stale, pruned
+
+    io.commit(
+        3, {"url_seen": (seen_df([(h, 2) for h in range(700, 750)], 3),
+                         ["host_bucket"])}
+    )
+    m3 = membership.rebuild_filters(spark, io, 3, cfg)
+    io.commit_meta_update(3, m3)
+    assert m3["filters_buckets"] == [1, 2]
+    for b, seen in (
+        (1, list(range(100)) + list(range(200, 250))),
+        (2, list(range(500, 600)) + list(range(700, 750))),
+    ):
+        f = load_bucket_filter(io.root, 3, b)
+        missed = int((~f.contains_many(np.array(seen, dtype=np.uint64))).sum())
+        assert missed == 0, (b, missed)
 
 
 def test_empty_delta_cycle_does_not_crash_rebuild(spark, tmp_path):
@@ -306,10 +370,11 @@ def test_from_scratch_build_is_full_and_ends_walk(spark, tmp_path):
     io.commit_meta_update(1, {"filters": 1, "filters_buckets": [3]})
     assert filter_locations(io, 2) == (2, {1: 2})
 def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
-    """More buckets than cores: the upsert and the consolidation carry run
-    in defaultParallelism tasks, not one task per bucket, yet every
-    ``host_bucket=`` dir still gets exactly one file and every bucket's
-    filter is byte-identical to a one-bucket-per-task build."""
+    """More buckets than cores: the build (upserts and consolidation
+    carries alike) runs in defaultParallelism tasks, not one task per
+    bucket, yet every ``host_bucket=`` dir still gets exactly one file and
+    every bucket's filter is byte-identical to a one-bucket-per-task
+    build."""
     import glob as _glob
     import os as _os
 
@@ -324,7 +389,7 @@ def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
     par = sc.defaultParallelism
     n = 2 * par + 3
     cfg = EngineConfig(n_buckets=n)
-    assert _bucket_rows(spark, host_bucket=list(range(n))).rdd.getNumPartitions() == par
+    assert _bucket_rows(spark, list(range(n))).rdd.getNumPartitions() == par
 
     def hashes(b, cycle):
         return [b * 10_000 + cycle * 1_000 + i for i in range(40)]
@@ -341,41 +406,38 @@ def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
             ))
         return io
 
-    def stage_files(io, stage):
+    def bucket_files(io):
         out = {}
         for f in _glob.glob(_os.path.join(
-            io.root, "filters", "cycle=2", f"stage={stage}", "host_bucket=*",
-            "*.parquet",
+            io.root, "filters", "cycle=2", "host_bucket=*", "*.parquet",
         )):
             b = int(f.split("host_bucket=")[1].split(_os.sep)[0])
             out.setdefault(b, []).append(f)
         return out
 
     packed = build(str(tmp_path / "packed"))
-    upsert, carry = stage_files(packed, "upsert"), stage_files(packed, "carry")
-    assert sorted(upsert) == [0, n - 1]
-    assert sorted(carry) == list(range(1, n - 1))  # more carried than cores
-    for files in list(upsert.values()) + list(carry.values()):
-        assert len(files) == 1, files
+    files = bucket_files(packed)
+    assert sorted(files) == list(range(n))  # 2 upserts + more carried than cores
+    for fs in files.values():
+        assert len(fs) == 1, fs
 
     # the same build with one bucket per task (the unpacked layout)
-    def one_bucket_per_task(spark, **cols):
+    def one_bucket_per_task(spark, buckets):
         with monkeypatch.context() as m:
             m.setattr(type(sc), "defaultParallelism", property(lambda _: n))
-            return _bucket_rows(spark, **cols)
+            return _bucket_rows(spark, buckets)
 
     assert one_bucket_per_task(
-        spark, host_bucket=list(range(n))
+        spark, list(range(n))
     ).rdd.getNumPartitions() == n
     monkeypatch.setattr(membership, "_bucket_rows", one_bucket_per_task)
-    single = build(str(tmp_path / "single"))
+    single = bucket_files(build(str(tmp_path / "single")))
     for b in range(n):
         f = load_bucket_filter(packed.root, 2, b)
         seen = hashes(b, 1) + (hashes(b, 2) if b in (0, n - 1) else [])
         assert f.contains_many(np.array(seen, dtype=np.uint64)).all()
-        stage = "upsert" if b in (0, n - 1) else "carry"
         data = [
             _pq.read_table(fs[b][0], columns=["data"])["data"][0].as_py()
-            for fs in (stage_files(packed, stage), stage_files(single, stage))
+            for fs in (files, single)
         ]
         assert data[0] == data[1]

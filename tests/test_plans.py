@@ -234,35 +234,6 @@ def test_pagerank_dims_broadcast_only_under_threshold(spark, monkeypatch):
     assert unhinted.count() == 40  # same result either way
 
 
-def test_filter_cap_scan_is_partition_pruned(spark, tmp_path):
-    """The fresh-filter capacity scan (membership.rebuild_filters)
-    restricts its aggregation to buckets MISSING a previous filter via
-    host_bucket.isin(missing). That only saves work if the predicate
-    reaches the hive-partitioned delta read as a PartitionFilter — pin
-    it: the same TableIO read path plus the isin must partition-prune,
-    never scan every bucket dir."""
-    from frontier_engine import schemas
-    from frontier_engine.tableio import TableIO
-
-    io = TableIO(str(tmp_path))
-    delta = spark.createDataFrame(
-        [(h, h % 4, 1) for h in range(200)], schemas.URL_SEEN
-    )
-    io.commit(1, {"url_seen": (delta.repartition(4, "host_bucket"),
-                               ["host_bucket"])})
-    read = io.read_appended(spark, "url_seen", 1, schemas.URL_SEEN)
-    pruned = read.where(F.col("host_bucket").isin([1, 3]))
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan, plan
-    # the isin lands in PartitionFilters (value pruning), not only as a
-    # post-scan data filter
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any("host_bucket" in ln and "[]" not in ln.split(
-        "PartitionFilters:")[1].split("PushedFilters")[0] for ln in pf), plan
-    # and the pruned read returns exactly the two buckets' rows
-    assert pruned.count() == 100
-
-
 def _canon_evals(plan: str) -> int:
     return sum(
         "ArrowEvalPython" in ln and "_canon_host" in ln
@@ -314,10 +285,10 @@ def test_driver_side_frames_are_local_scans(spark, tmp_path):
 
     budgets = budgets_df(spark, {"a.com": 2, "b.com": 5})
     empty = TableIO(str(tmp_path))._empty(spark, schemas.PENDING)
-    buckets = _bucket_rows(spark, host_bucket=[3, 5, 6], src_cycle=[1, 1, 2])
+    buckets = _bucket_rows(spark, [3, 5, 6])
     for df in (budgets, empty, buckets):
         assert "ExistingRDD" not in _plan(df), _plan(df)
     assert sorted(map(tuple, budgets.collect())) == [("a.com", 2), ("b.com", 5)]
     assert empty.schema == schemas.PENDING and empty.count() == 0
     assert buckets.rdd.getNumPartitions() == 3
-    assert [tuple(r) for r in buckets.collect()] == [(3, 1), (5, 1), (6, 2)]
+    assert [tuple(r) for r in buckets.collect()] == [(3,), (5,), (6,)]

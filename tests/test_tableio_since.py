@@ -1,5 +1,5 @@
-"""Unit semantics of TableIO.read_appended_since: the recrawl-TTL scan
-path must read exactly the cycle dirs that can hold in-window rows —
+"""Unit semantics of TableIO.read_appended(..., since=): the recrawl-TTL
+scan path must read exactly the cycle dirs that can hold in-window rows —
 skipping pre-window deltas wholesale, skipping a base older than the
 window, and including (whole) a base at/after the window start."""
 
@@ -37,14 +37,14 @@ def test_read_appended_since_prunes_cycle_dirs(spark, tmp_path):
     assert len(_hashes(full)) == 15
 
     # window start AFTER the base: base skipped wholesale, deltas 4-5 only
-    got = io.read_appended_since(spark, "url_seen", 5, 4, schemas.URL_SEEN)
+    got = io.read_appended(spark, "url_seen", 5, schemas.URL_SEEN, since=4)
     assert _hashes(got) == _hashes(
         _delta(spark, 4).unionByName(_delta(spark, 5))
     )
 
     # window start AT the base cycle: base included whole (it folds older
     # rows in — the caller's residual first_seen_cycle filter drops them)
-    got = io.read_appended_since(spark, "url_seen", 5, 3, schemas.URL_SEEN)
+    got = io.read_appended(spark, "url_seen", 5, schemas.URL_SEEN, since=3)
     assert _hashes(got) == _hashes(full)
     assert _hashes(
         got.where("first_seen_cycle >= 3")
@@ -55,9 +55,9 @@ def test_read_appended_since_prunes_cycle_dirs(spark, tmp_path):
     )
 
     # window start BEFORE the base: identical to read_appended
-    got = io.read_appended_since(spark, "url_seen", 5, 1, schemas.URL_SEEN)
+    got = io.read_appended(spark, "url_seen", 5, schemas.URL_SEEN, since=1)
     assert _hashes(got) == _hashes(full)
 
     # through_cycle before the base: plain delta range
-    got = io.read_appended_since(spark, "url_seen", 2, 2, schemas.URL_SEEN)
+    got = io.read_appended(spark, "url_seen", 2, schemas.URL_SEEN, since=2)
     assert _hashes(got) == _hashes(_delta(spark, 2))
