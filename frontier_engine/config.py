@@ -31,17 +31,15 @@ class EngineConfig:
     use_seen_filter: bool = True
     # consolidate url_seen deltas every N cycles (tableio compaction)
     compact_every: int = 8
-    # physical salt for hot host_buckets: the scheduled-batch write spreads
-    # each bucket over salt_factor tasks (pmod(url_hash, salt)); purely a
-    # partition-balance knob — crawl ORDER is defined by fetch_seq and never
-    # changes (north_star: salting + AQE handle host-key skew)
-    salt_factor: int = 1
-    # two-phase politeness window (politeness.rank_by_budget): >1 pre-ranks
-    # per (host, pmod(url_hash, salt)) keeping <= budget rows per salt, so
-    # the exact per-host window never sorts more than salt*budget rows of
-    # one host in one task (skew-safe at a 10^10-URL frontier). 1 = single
-    # exact window — the right choice when budgets are effectively unbounded
-    # (top-k pruning would keep everything and only add a pass).
+    # the engine's one host-skew rule, the two-phase politeness window
+    # (politeness.rank_by_budget): >1 pre-ranks per (host, pmod(url_hash,
+    # salt)) keeping <= budget rows per salt, so the exact per-host window
+    # never sorts more than salt*budget rows of one host in one task
+    # (skew-safe at a 10^10-URL frontier); the queue write after it sorts a
+    # bucket's scheduled slice, which the budgets bound. Exact for ANY salt
+    # (pinned by the skew goldens). 1 = single exact window — the right
+    # choice when budgets are effectively unbounded (top-k pruning would
+    # keep everything and only add a pass).
     politeness_salt: int = 8
     # adaptive politeness: when set (an integer percentage >= 1), a host
     # whose previous-cycle fetch failures satisfy
@@ -57,16 +55,6 @@ class EngineConfig:
     # in the frontier are blocked by a pending anti-join instead (url_seen
     # is written at enqueue, not fetch). None = crawl-once (default).
     recrawl_after_cycles: int | None = None
-    # derive politeness_salt and salt_factor PER CYCLE from observed host
-    # skew instead of the static values above: the previous cycle's
-    # manifest meta records the hottest host's depth and the eligible
-    # frontier's total (host_depth_max / host_depth_total); salting turns
-    # on when that host holds >= 10% of the frontier AND its depth is
-    # >= 8 x default_budget, sized next_pow2(share * 32) (cap 16).
-    # Purely physical — the two-phase window and the salted queue write
-    # are exact for ANY salt, so the auto choice can never change results
-    # (pinned by the skew golden).
-    auto_salt: bool = False
     # commit a per-cycle page_stats table (corpus.enrich over the cycle's
     # successfully fetched pages: fingerprint / quality / token counts /
     # language ID / MinHash-LSH near-dup group). Off by default: it is

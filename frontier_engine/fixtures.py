@@ -59,7 +59,7 @@ class FixtureConfig:
         # skew fixture: 30% of URLs on host1 — deliberately NOT host0,
         # whose robots row disallows /p/ (h%11==0): a robots-blocked hot
         # host never reaches the politeness window, so host0 skew would
-        # exercise only the bucket write path, not the window/auto-salt
+        # exercise only the bucket write path, not the two-phase window
         if self.skew and i % 10 < 3:
             return 1
         return i % self.n_hosts

@@ -2312,7 +2312,8 @@ def _entry_engine(spark):
     delta (ann_index is output-only — the crawl trace is identical with it
     off, pinned by the goldens). Cached under .engine_runs keyed by the
     engine-source hash so a code change can never serve a stale snapshot
-    to the driver's smoke/oracle check; additionally memoized in-process so
+    to the driver's smoke/oracle check (and by the fixture path, which the
+    run's pages_canon marker names); additionally memoized in-process so
     every engine-backed query after the first serves the already-committed
     snapshot without touching the engine at all."""
     import dataclasses as _dc
@@ -2323,6 +2324,7 @@ def _entry_engine(spark):
     from .fixtures import FixtureConfig, ensure_fixtures
     from .golden import build_engine
 
+    fix_dir = ensure_fixtures(os.path.join(REPO, ".fixtures"), 2000)
     eng_dir = os.path.dirname(os.path.abspath(__file__))
     h = _hashlib.sha256()
     for fn in sorted(os.listdir(eng_dir)):
@@ -2330,12 +2332,14 @@ def _entry_engine(spark):
             with open(os.path.join(eng_dir, fn), "rb") as fh:
                 h.update(fn.encode())
                 h.update(fh.read())
+    # the run's pages_canon marker names the fixture's absolute path, so a
+    # moved checkout must not reuse a run cached under the old path
+    h.update(os.path.abspath(fix_dir).encode())
     tag = f"entry_n2000_{h.hexdigest()[:10]}"
     memo = _ENTRY_ENGINE_MEMO[0]
     if memo is not None and memo[0] == tag and memo[1].spark is spark:
         return memo[1]
 
-    fix_dir = ensure_fixtures(os.path.join(REPO, ".fixtures"), 2000)
     cfg = _dc.replace(
         config_for_fixture(FixtureConfig(n_urls=2000)),
         ann_index=True,

@@ -20,10 +20,13 @@ Scale notes (10^10-URL frontier, 1000 executors):
   per-bucket cuckoo filters (membership.py) so the exact join sees only
   candidates that *might* be duplicates; membership stays exactly
   reproducible because the filter can only short-circuit definite-negatives.
-- the priority queue is a repartition on host_bucket (+ optional salt for
-  hot hosts) with sortWithinPartitions — shuffle once, sort locally;
-  per-host order is enforced logically by the budget window's total key
-  (priority DESC, crawl_ts, url_hash), so salting never changes results.
+- host skew is handled in one place, the two-phase politeness window
+  (politeness.rank_by_budget, cfg.politeness_salt): phase 1 keeps at most
+  budget rows per (host, pmod(url_hash, salt)), so the exact per-host
+  window never sees more than salt * budget rows of one hot host. The
+  queue after it is bounded by the budgets, not by the frontier.
+- the priority queue is a repartition on host_bucket whose fetch_seq
+  window sort is the queue order — shuffle once, sort locally.
 - pending carry + url_seen deltas are written partitioned by host_bucket:
   next cycle's joins read co-partitioned data and partition-prune.
 """
@@ -285,36 +288,6 @@ class FrontierScheduler:
             self.spark, "host_rank", c, schemas.HOST_RANK
         )
 
-    def _auto_salt(self, cycle: int) -> int:
-        """Physical salt from OBSERVED skew (cfg.auto_salt): the previous
-        cycle records the hottest single host's share of the eligible
-        frontier in its manifest meta (two scalars from one partial-agg
-        job over the already-checkpointed ranked frame — no extra frontier
-        scan). Share is scale-free: one host owning >= 10% of a frontier
-        is exactly the skew the two-phase window and salted queue write
-        fight, at 2k URLs or 10^10. salt = next_pow2(share * 32) capped
-        at 16 (the window's survivor bound is salt * budget per host).
-        Deterministic given committed history -> resumes pick the same
-        salt."""
-        if cycle <= 1:
-            return 1
-        m = self.io.manifest(cycle - 1) or {}
-        meta = m.get("meta", {})
-        hottest = meta.get("host_depth_max", 0)
-        total = meta.get("host_depth_total", 0)
-        if not total or not hottest:
-            return 1
-        share = hottest / total
-        # both gates must fire: share (is one host dominating?) AND an
-        # absolute depth floor (a window over <= 8 x budget rows is cheap
-        # regardless of share — tiny frontiers make share pure noise)
-        if share < 0.10 or hottest < 8 * self.cfg.default_budget:
-            return 1
-        p = 1
-        while p < share * 32:
-            p <<= 1
-        return min(16, p)
-
     # -- the cycle ---------------------------------------------------------
 
     def run_cycle(self, cycle: int, build_filters: bool = True) -> CycleResult:
@@ -335,7 +308,17 @@ class FrontierScheduler:
         Trade-off: a checkpoint block lost mid-cycle (an executor dies)
         fails the cycle instead of being recomputed from lineage. That is
         safe: a failed cycle commits nothing (the manifest barrier), and a
-        resume re-runs it from the last committed cycle."""
+        resume re-runs it from the last committed cycle.
+
+        A committed cycle is refused before anything is read or written:
+        its commit would replace the cycle's table dirs one by one, so a
+        re-run that failed part-way would leave the old manifest naming a
+        deleted dir. ``run`` (without ``start_cycle``) and the streaming
+        driver start at ``latest_cycle() + 1``."""
+        if self.io.manifest(cycle) is not None:
+            raise ValueError(
+                f"cycle {cycle} is already committed under {self.io.root!r}"
+            )
         tracked: list = []
         try:
             return self._run_cycle(cycle, build_filters, tracked)
@@ -354,10 +337,6 @@ class FrontierScheduler:
             tracked.append(cp)
             return cp
 
-        if cfg.auto_salt:
-            politeness_salt = salt_factor = self._auto_salt(cycle)
-        else:
-            politeness_salt, salt_factor = cfg.politeness_salt, cfg.salt_factor
         fresh_start = io.manifest(cycle - 1) is None  # nothing committed yet
         # does this cycle consolidate the accumulating tables? (the core's
         # own and, through the cycle context, the handlers')
@@ -509,7 +488,7 @@ class FrontierScheduler:
         # just pay an extra full-frontier block write+read per cycle
 
         # ---- 2. robots (SkipContainer analog) -----------------------------
-        bucketed_window = politeness_salt <= 1
+        bucketed_window = cfg.politeness_salt <= 1
         with_robots = apply_robots(
             pending_all, self.robots, rfc=cfg.robots_rfc,
             small=self._robots_small,
@@ -562,13 +541,13 @@ class FrontierScheduler:
         # subplan runs under AQE (AdaptiveSparkPlan), and the LogicalRDD
         # leaf that replaces it reports UnknownPartitioning to consumers —
         # partitioning reuse never crosses a checkpoint boundary here. The
-        # salted two-phase window deliberately SPLITS a host across tasks
-        # and keeps its own (host, salt) exchange.
+        # two-phase window (politeness_salt > 1) deliberately SPLITS a host
+        # across tasks and keeps its own (host, salt) exchange.
         if bucketed_window:
             eligible = eligible.repartition(cfg.n_buckets, "host_bucket")
         ranked = rank_by_budget(
             eligible, budgets_dim, cfg.default_budget,
-            salt=politeness_salt, bucketed=bucketed_window,
+            salt=cfg.politeness_salt, bucketed=bucketed_window,
         )
         ranked = _p(ranked)
         # keep rk: it is the per-host crawl-order rank, reused below for
@@ -658,59 +637,32 @@ class FrontierScheduler:
         if self._robots_small:
             delays = F.broadcast(delays)
 
-        def _with_seq(df):
-            """fetch_seq + planned_fetch_ts over an already-partitioned
-            frame: the window reuses the incoming hashpartitioning (its
-            ClusteredDistribution(host_bucket) is satisfied), so the only
-            sort is the window's own — which is exactly the queue order,
-            making a separate sortWithinPartitions redundant (the rows
-            reach the writer in (host_bucket, priority DESC, crawl_ts,
-            url_hash) order, identical per bucket-dir to the old
-            window→repartition→re-sort spelling, one Exchange + one Sort
-            cheaper per cycle)."""
-            return (
-                df.withColumn("fetch_seq", F.row_number().over(wb))
-                .join(delays, "host", "left")
-                .withColumn(
-                    "planned_fetch_ts",
-                    F.expr(
-                        "timestampadd(MILLISECOND, CAST((rk - 1) * "
-                        "coalesce(crawl_delay_ms, 0) AS BIGINT), "
-                        f"TIMESTAMP'{base_ts}')"
-                    ),
-                )
-                .drop("crawl_delay_ms")
-                .select(*schemas.SCHEDULED.fieldNames())
+        # the priority queue, physically: one repartition by host_bucket +
+        # the window's own sort. The explicit repartition stays: scheduled
+        # reads the RANKED CHECKPOINT, whose leaf reports UnknownPartitioning
+        # (see the ranked comment above) — without it EnsureRequirements
+        # would insert the same exchange at shuffle.partitions width,
+        # under-parallelizing the queue sort + partitioned write relative to
+        # n_buckets tasks. The window reuses that hashpartitioning (its
+        # ClusteredDistribution(host_bucket) is satisfied), so its sort is
+        # the only one, and it is exactly the queue order: rows reach the
+        # writer in (host_bucket, priority DESC, crawl_ts, url_hash) order.
+        scheduled_out = (
+            scheduled.withColumn("cycle", F.lit(cycle))
+            .repartition(cfg.n_buckets, "host_bucket")
+            .withColumn("fetch_seq", F.row_number().over(wb))
+            .join(delays, "host", "left")
+            .withColumn(
+                "planned_fetch_ts",
+                F.expr(
+                    "timestampadd(MILLISECOND, CAST((rk - 1) * "
+                    "coalesce(crawl_delay_ms, 0) AS BIGINT), "
+                    f"TIMESTAMP'{base_ts}')"
+                ),
             )
-
-        # the priority queue, physically: (salted) repartition + the window
-        # sort. salt_factor > 1 splits hot buckets across tasks; fetch_seq
-        # already carries the total crawl order, so salting never changes
-        # results. In the salted case fetch_seq must still rank the WHOLE
-        # bucket in one window task, so the salt split happens after it.
-        scheduled_c = scheduled.withColumn("cycle", F.lit(cycle))
-        # the explicit repartition stays: scheduled reads the RANKED
-        # CHECKPOINT, whose leaf reports UnknownPartitioning (see the ranked
-        # comment above) — without it EnsureRequirements would insert the
-        # same exchange at shuffle.partitions width, under-parallelizing
-        # the queue sort + partitioned write relative to n_buckets tasks
-        seq_in = scheduled_c.repartition(cfg.n_buckets, "host_bucket")
-        if salt_factor > 1:
-            scheduled_out = (
-                _with_seq(seq_in)
-                .withColumn(
-                    "_salt", F.pmod(F.col("url_hash"), F.lit(salt_factor))
-                )
-                .repartition(
-                    cfg.n_buckets * salt_factor, "host_bucket", "_salt"
-                )
-                .sortWithinPartitions(
-                    F.desc("priority"), F.asc("crawl_ts"), F.asc("url_hash")
-                )
-                .select(*schemas.SCHEDULED.fieldNames())
-            )
-        else:
-            scheduled_out = _with_seq(seq_in)
+            .drop("crawl_delay_ms")
+            .select(*schemas.SCHEDULED.fieldNames())
+        )
 
         url_seen_delta = ingested.select(
             "url_hash",
@@ -788,21 +740,6 @@ class FrontierScheduler:
             tables.update(h_tables)
             meta.update(h_meta)
             warm += h_warm
-        if cfg.auto_salt:
-            meta["auto_salt"] = salt_factor  # observability + test hook
-            # hottest-host share of this cycle's eligible frontier: feeds
-            # the NEXT cycle's _auto_salt. One job over the checkpointed
-            # ranked frame (map-side partial agg -> n_hosts -> 1 row).
-            depth = (
-                ranked.groupBy("host")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.max("n").alias("mx"), F.sum("n").alias("tot")
-                )
-                .collect()[0]
-            )
-            meta["host_depth_max"] = int(depth["mx"] or 0)
-            meta["host_depth_total"] = int(depth["tot"] or 0)
         if compact:
             full_seen = io.read_appended(
                 spark, "url_seen", cycle - 1, schemas.URL_SEEN

@@ -581,6 +581,42 @@ def test_orphan_dirs_from_crashed_commit_ignored(
     assert diff_traces(st, rt) == []
 
 
+def test_rerun_of_committed_cycle_refused(
+    spark, tiny_fixture_dir, tmp_path_factory
+):
+    """Re-running a committed cycle must raise before it reads or writes
+    anything: its commit would replace the cycle's table dirs one by one,
+    and a re-run that failed part-way would leave the committed manifest
+    naming a deleted dir. The manifest and every table dir stay
+    byte-unchanged."""
+    import hashlib
+
+    fix = FixtureConfig(n_urls=2000)
+    cfg = config_for_fixture(fix)
+    work = str(tmp_path_factory.mktemp("engine-rerun"))
+    eng = build_engine(spark, tiny_fixture_dir, work, cfg)
+    eng.run_cycle(1, build_filters=False)
+
+    def snapshot():
+        out = {}
+        for dirpath, _dirs, files in os.walk(work):
+            for fn in files:
+                p = os.path.join(dirpath, fn)
+                with open(p, "rb") as f:
+                    out[os.path.relpath(p, work)] = hashlib.sha256(
+                        f.read()
+                    ).hexdigest()
+        return out
+
+    before = snapshot()
+    assert "_manifests/manifest.000001.json" in before
+    assert any(p.startswith("scheduled/cycle=1/") for p in before)
+    with pytest.raises(ValueError, match="already committed"):
+        eng.run_cycle(1)
+    assert snapshot() == before
+    assert eng.io.latest_cycle() == 1
+
+
 def test_robots_rfc_golden(spark, tiny_fixture_dir, tmp_path_factory):
     """RFC 9309 robots mode (cfg.robots_rfc): allow rules override shorter
     disallows (longest match wins, allow wins ties). The engine trace must

@@ -1,9 +1,7 @@
-"""Skew handling: 30% of URLs on one host (the skew fixture). Salting +
-AQE must keep results EXACTLY equal to the refspec golden trace — salt is a
-physical knob only."""
-
-import dataclasses
-import os
+"""Host skew: 30% of URLs on one host (the skew fixture). The engine's one
+skew rule is the two-phase politeness window (``politeness_salt``,
+politeness.rank_by_budget); it is exact for any salt, so every skewed
+trace must equal the refspec golden trace, which has no salt."""
 
 from frontier_engine.config import config_for_fixture
 from frontier_engine.fixtures import FixtureConfig, ensure_fixtures
@@ -15,7 +13,7 @@ from tests.conftest import FIXTURE_CACHE
 def test_skewed_host_with_salting(spark, tmp_path_factory):
     fix_dir = ensure_fixtures(FIXTURE_CACHE, 2000, skew=True)
     fix = FixtureConfig(n_urls=2000, skew=True)
-    cfg = dataclasses.replace(config_for_fixture(fix), salt_factor=4)
+    cfg = config_for_fixture(fix)
 
     work = str(tmp_path_factory.mktemp("engine-skew"))
     eng = build_engine(spark, fix_dir, work, cfg)
@@ -26,97 +24,55 @@ def test_skewed_host_with_salting(spark, tmp_path_factory):
     rt = ref_trace(run(pages, seeds, robots, cfg, cycles=2))
     assert diff_traces(st, rt) == []
 
-    # the hot bucket exists: host0 holds ~30% of the frontier
+    # the hot bucket exists: host1 holds ~30% of the frontier
     sizes = {}
     for lin in rt["lineage"].values():
         for b, d in lin.items():
             sizes[b] = sizes.get(b, 0) + d["rows_scanned"]
     assert max(sizes.values()) > 0.25 * sum(sizes.values())
 
-    # salted write split the hot bucket across multiple files
-    sched_dir = os.path.join(work, "scheduled", "cycle=1")
-    per_bucket_files = {}
-    for dirpath, _dirs, files in os.walk(sched_dir):
-        n = len([f for f in files if f.endswith(".parquet")])
-        if "host_bucket=" in dirpath and n:
-            per_bucket_files[dirpath] = n
-    assert max(per_bucket_files.values()) > 1
 
+def test_deep_hot_host_two_phase_golden(spark, tmp_path_factory):
+    """The n=20000 skew fixture at the default politeness_salt: the hot
+    host's eligible frontier grows past salt * budget, so phase 1 of the
+    window prunes it at depth, and the 3-cycle trace must still equal
+    refspec exactly."""
+    from pyspark.sql import functions as F
 
-def test_auto_salt_picks_salt_from_observed_skew(spark, tmp_path_factory):
-    """cfg.auto_salt derives the physical salts per cycle from the previous
-    cycle's observed hottest-host share (manifest meta): the n=20000 skew
-    fixture (30% of URLs on host1) accumulates a deep hot-host frontier
-    under its politeness budget, so salting must turn ON (salt > 1) once
-    the depth floor is crossed — without any static salt config — and the
-    trace must stay byte-identical to refspec (salt is physical only;
-    refspec has no salt concept)."""
+    from frontier_engine import schemas
+
     fix_dir = ensure_fixtures(FIXTURE_CACHE, 20000, skew=True)
     fix = FixtureConfig(n_urls=20000, skew=True)
-    cfg = dataclasses.replace(
-        config_for_fixture(fix),
-        auto_salt=True, salt_factor=1, politeness_salt=1,
-    )
+    cfg = config_for_fixture(fix)
+    assert cfg.politeness_salt > 1  # the default two-phase window
 
-    work = str(tmp_path_factory.mktemp("engine-autosalt"))
+    work = str(tmp_path_factory.mktemp("engine-skew-deep"))
     eng = build_engine(spark, fix_dir, work, cfg)
     eng.run(cycles=3)
-
-    salts = {
-        k: eng.io.manifest(k)["meta"]["auto_salt"] for k in range(1, 4)
-    }
-    assert salts[1] == 1  # no history yet
-    assert salts[3] > 1, salts  # hot-host depth observed -> salted
-    assert all(s <= 16 for s in salts.values())
 
     st = spark_trace(spark, eng.io, range(1, 4))
     pages, seeds, robots = read_fixture_rows(fix_dir)
     rt = ref_trace(run(pages, seeds, robots, cfg, cycles=3))
     assert diff_traces(st, rt) == []
 
-    # and an unskewed corpus must keep salting OFF (no pointless pre-pass):
-    # at n=2000 the hottest host never crosses the 8x-budget depth floor
-    plain_dir = ensure_fixtures(FIXTURE_CACHE, 2000)
-    plain_cfg = dataclasses.replace(
-        config_for_fixture(FixtureConfig(n_urls=2000)),
-        auto_salt=True, salt_factor=1, politeness_salt=1,
-    )
-    work2 = str(tmp_path_factory.mktemp("engine-autosalt-plain"))
-    eng2 = build_engine(spark, plain_dir, work2, plain_cfg)
-    eng2.run(cycles=2)
-    assert eng2.io.manifest(2)["meta"]["auto_salt"] == 1
-
-
-def test_auto_salt_deterministic_across_resume(spark, tmp_path_factory):
-    """The auto-salt decision reads only COMMITTED manifest meta, so a
-    split run (2 cycles, fresh scheduler, 1 more) must pick the same salts
-    and produce the same trace as an uninterrupted 3-cycle run."""
-    fix_dir = ensure_fixtures(FIXTURE_CACHE, 20000, skew=True)
-    fix = FixtureConfig(n_urls=20000, skew=True)
-    cfg = dataclasses.replace(
-        config_for_fixture(fix),
-        auto_salt=True, salt_factor=1, politeness_salt=1,
-    )
-
-    work_a = str(tmp_path_factory.mktemp("autosalt-straight"))
-    eng_a = build_engine(spark, fix_dir, work_a, cfg)
-    eng_a.run(cycles=3)
-
-    work_b = str(tmp_path_factory.mktemp("autosalt-resume"))
-    eng_b = build_engine(spark, fix_dir, work_b, cfg)
-    eng_b.run(cycles=2)
-    eng_b2 = build_engine(spark, fix_dir, work_b, cfg)  # fresh scheduler
-    eng_b2.run(cycles=1)  # resumes at cycle 3
-
+    # a cycle's eligible rows (robots passed) are its scheduled rows plus
+    # its deferred ones; pending = deferred + the retried scheduled misses,
+    # so the distinct url_hash union of scheduled and pending is exactly
+    # the window's input for the host
+    hot = fix.host(0)
+    limit = cfg.politeness_salt * cfg.budget_of(hot)
+    depths = []
     for k in range(1, 4):
-        ma = eng_a.io.manifest(k)["meta"]
-        mb = eng_b2.io.manifest(k)["meta"]
-        assert ma["auto_salt"] == mb["auto_salt"], k
-        assert ma["host_depth_max"] == mb["host_depth_max"], k
-    assert diff_traces(
-        spark_trace(spark, eng_a.io, range(1, 4)),
-        spark_trace(spark, eng_b2.io, range(1, 4)),
-    ) == []
+        keys = [
+            eng.io.read_cycle(spark, name, k, schema)
+            .where(F.col("host") == hot)
+            .select("url_hash")
+            for name, schema in (
+                ("scheduled", schemas.SCHEDULED), ("pending", schemas.PENDING)
+            )
+        ]
+        depths.append(keys[0].union(keys[1]).distinct().count())
+    assert max(depths) > limit, (depths, limit)
 
 
 def test_two_phase_window_bounds_task_rows(spark):
