@@ -116,10 +116,16 @@ def run_once(
     _warmup(spark)
     t0 = time.time()
     cycle_secs = []
+    # per-table write attribution (each write materializes its stage under
+    # the warm ordering, so this is the per-stage cost breakdown, measured
+    # with zero extra actions), summed across cycles per table
+    tw: dict = {}
     for k in range(1, cycles + 1):
         tc = time.time()
-        eng.run_cycle(k, build_filters=(k < cycles))
+        res = eng.run_cycle(k, build_filters=(k < cycles))
         cycle_secs.append(round(time.time() - tc, 2))
+        for name, secs in res.write_secs.items():
+            tw[name] = round(tw.get(name, 0.0) + secs, 2)
     elapsed = time.time() - t0
 
     lin = io.read_appended(spark, "lineage", cycles, schemas.LINEAGE)
@@ -146,15 +152,6 @@ def run_once(
         "urls_per_sec": round(processed / elapsed, 1),
         "cycle_secs": cycle_secs,
     }
-    # per-table write attribution from the manifests (tableio records the
-    # real write wall-clocks — each write materializes its stage under the
-    # warm ordering, so this is the per-stage cost breakdown, measured
-    # with zero extra actions). Summed across cycles per table.
-    tw: dict = {}
-    for k in range(1, cycles + 1):
-        m = io.manifest(k) or {}
-        for name, secs in m.get("write_secs", {}).items():
-            tw[name] = round(tw.get(name, 0.0) + secs, 2)
     if tw:
         out["table_write_secs"] = tw
     if keep_workdir is None:

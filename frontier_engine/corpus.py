@@ -599,7 +599,7 @@ def ivf_probe_topk(
         # default all cycles re-commit the same pinned rows, and with
         # ann_retrain_on_compact a retrain re-assigns the whole base in
         # the same commit, so base + later deltas again share these stats
-        cent_cycle = io.latest_table_cycle("ann_centroids", cycle) or cycle
+        cent_cycle = io.snapshot(cycle).table_cycle("ann_centroids") or cycle
     cent_rows = [
         (r["k"], r["d"], r["s"], r["n"])
         for r in io.read_cycle(

@@ -79,7 +79,7 @@ def _nd_closure(ctx: CycleContext, pstats, nd_bands_delta, tables, meta):
     from .graph import connected_components_star
 
     spark, io, cycle = ctx.spark, ctx.io, ctx.cycle
-    prev_closure = io.latest_table_cycle("nd_components", cycle - 1)
+    prev_closure = io.snapshot(cycle - 1).table_cycle("nd_components")
     if prev_closure is None:
         delta_bands = io.read_appended(
             spark, "nd_bands", cycle - 1, schemas.ND_BANDS
@@ -228,12 +228,13 @@ def _ann_index(ctx: CycleContext, stage_frame, tables, meta):
         # meta records which cycle trained them. Golden vs ivf_py.
         from .corpus import ivf_assign_cells, ivf_train_collect
 
+        prev = io.snapshot(cycle - 1)
         retrain = (
             cfg.ann_retrain_on_compact
             and ctx.compact
-            and io.latest_table_cycle("ann_index", cycle - 1) is not None
+            and prev.table_cycle("ann_index") is not None
         )
-        prev_cent = io.latest_table_cycle("ann_centroids", cycle - 1)
+        prev_cent = prev.table_cycle("ann_centroids")
         cent_rows: list = []
         if retrain:
             # quantizer refresh folded into the compaction this cycle

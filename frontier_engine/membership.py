@@ -16,17 +16,19 @@ implied by sqlite ROWID monotonicity + the last_row checkpoint). Semantics:
   inserted into the bucket's previous filter inside a streamed
   ``mapInPandas`` task that owns the whole bucket (the same
   exclusive-ownership sharding as the reference's per-container workers);
-  a bucket with no previous row gets a fresh filter from its files;
+  a bucket with no previous row gets a fresh filter from its files, sized
+  by the row counts the snapshot records for them;
 - a bucket whose previous row is expected but unreadable (a crashed
   consolidation pruned it), or whose cuckoo filter overflowed, is rebuilt
   from its FULL url_seen as a bloom filter — fully vectorized numpy, no
   per-item loop — per the north star's "bloom fallback for cold
   partitions" (``_bucket_row`` is the one rule);
 - carry-forward is LOGICAL, not physical: each cycle's ``filters`` delta
-  holds only the buckets whose url_seen changed; the driver derives a tiny
-  ``bucket -> newest delta cycle`` map from manifest metadata
-  (``filter_locations``) and ships it into the prefilter closure, so an
-  untouched bucket keeps serving its old row with zero bytes copied;
+  holds only the buckets whose url_seen changed, and its manifest lists
+  the files it wrote; the driver derives a tiny ``bucket -> newest filter
+  file`` map from the store's snapshot (``Snapshot.filters``) and ships it
+  into the prefilter closure, so an untouched bucket keeps serving its old
+  row with zero bytes copied and no directory listed;
 - a lagging filter is safe: if the newest filter build is older than the
   newest url_seen delta (a run's last cycle skips the build), the
   scheduler exact-joins "definite new" candidates against the missing
@@ -36,8 +38,8 @@ implied by sqlite ROWID monotonicity + the last_row checkpoint). Semantics:
 All bit-twiddling is numpy-vectorized for lookups and bloom builds; only the
 cuckoo insert path walks items (it touches only the small per-cycle delta).
 
-Executor tasks read filter rows directly with pyarrow (predicate pushdown on
-``host_bucket``); reads go through an LRU cache so one long-lived Python
+Executor tasks read each filter row directly with pyarrow from the file the
+snapshot names; reads go through an LRU cache so one long-lived Python
 worker holds at most _CACHE_CAP deserialized filters regardless of how many
 cycles it serves.
 """
@@ -48,6 +50,8 @@ import os
 from collections import OrderedDict
 
 import numpy as np
+
+from .tableio import bucket_of
 
 _FP_MASK = np.uint64(0xFFFF)
 _MIX = np.uint64(0x9E3779B97F4A7C15)
@@ -257,24 +261,18 @@ def filter_from_row(kind: str, n_bits, data: bytes, writable: bool = False):
 # parquet-row storage (rides TableIO's layout; executor reads via pyarrow)
 # ---------------------------------------------------------------------------
 
-def _cycle_dir(root: str, cycle: int) -> str:
-    return os.path.join(root, "filters", f"cycle={cycle}")
-
-
-def load_bucket_filter(root: str, cycle: int, bucket: int,
-                       writable: bool = False):
-    """Read one bucket's filter row from the cycle's parquet delta. The
-    delta is hive-partitioned by host_bucket, so the read opens EXACTLY the
-    bucket's own file via the directory layout — no dataset discovery
-    over every bucket's files per call (that discovery was a measured 5x
-    slowdown of the prefilter stage). Returns None if the bucket has no
-    row at that cycle (never written, or its dir was pruned)."""
+def load_bucket_filter(path: str, writable: bool = False):
+    """Read one bucket's filter row from its parquet file, named by the
+    snapshot (``Snapshot.filters``): exactly that file opens — no dataset
+    discovery over every bucket's files per call (that discovery was a
+    measured 5x slowdown of the prefilter stage). Returns None if the
+    file is gone (a crashed consolidation pruned its dir)."""
     import pyarrow.parquet as _pq
 
-    files = _bucket_files([_cycle_dir(root, cycle)], bucket)
-    if not files:
+    try:
+        t = _pq.read_table(path, columns=["kind", "n_bits", "data"])
+    except FileNotFoundError:
         return None
-    t = _pq.read_table(files[0], columns=["kind", "n_bits", "data"])
     return filter_from_row(
         str(t["kind"][0]),
         t["n_bits"][0].as_py(),
@@ -283,63 +281,19 @@ def load_bucket_filter(root: str, cycle: int, bucket: int,
     )
 
 
-def _bucket_files(dirs: list, bucket: int) -> list:
-    """One bucket's parquet files under hive-partitioned dirs, in dir
-    order (sorted within each dir: cuckoo inserts are order-sensitive,
-    so every build streams a bucket's rows in the same order)."""
-    import glob as _glob
-
-    return [
-        f
-        for d in dirs
-        for f in sorted(
-            _glob.glob(os.path.join(d, f"host_bucket={bucket}", "*.parquet"))
-        )
-    ]
+def _by_bucket(files: list) -> dict:
+    """{bucket -> [(path, rows)]} of url_seen files, keeping their order
+    (cycle order, then sorted names within a dir: cuckoo inserts are
+    order-sensitive, so every build streams a bucket's rows in the same
+    order)."""
+    out: dict = {}
+    for f in files:
+        out.setdefault(bucket_of(f.path), []).append((f.path, f.rows))
+    return out
 
 
-def _listed_buckets(dirs: list) -> set:
-    """The buckets with a ``host_bucket=`` dir under any of ``dirs`` — a
-    directory listing, no file opened."""
-    import glob as _glob
-
-    return {
-        int(p.rsplit("host_bucket=", 1)[1])
-        for d in dirs
-        for p in _glob.glob(os.path.join(d, "host_bucket=*"))
-    }
-
-
-def filter_locations(io, through_cycle: int):
-    """Driver-side: (last_build_cycle, {bucket -> newest delta cycle}) for
-    filters committed ≤ through_cycle. The map is the logical carry-forward:
-    a bucket missing from newer deltas had no url_seen rows since its entry's
-    cycle, so that old row still covers it through last_build_cycle. Cost:
-    manifest JSONs only — no data reads.
-
-    A visited "filters_full" manifest (a build whose inserts covered
-    deltas from cycle 1, or a consolidation) ends the walk: it covered
-    every data-bearing bucket, so older entries are moot."""
-    last_build = 0
-    loc: dict[int, int] = {}
-    for c in range(through_cycle, 0, -1):
-        m = io.manifest(c)
-        if not m:
-            continue
-        meta = m.get("meta", {})
-        if meta.get("filters") is None:
-            continue
-        if last_build == 0:
-            last_build = c
-        for b in meta.get("filters_buckets", []):
-            loc.setdefault(int(b), c)
-        if meta.get("filters_full"):
-            break
-    return last_build, loc
-
-
-# per-Python-worker LRU for the read-only prefilter path; keyed by
-# (root, cycle, bucket) so entries are immutable. Bounded by BOTH an entry
+# per-Python-worker LRU for the read-only prefilter path; keyed by the
+# filter file's path (it names its cycle dir) so entries are immutable. Bounded by BOTH an entry
 # cap and a BYTE budget with true LRU eviction: at the north-star scale a
 # single bucket's bloom is ~200 MB serialized, so an entry-count-only cap
 # of 128 would let one worker hold tens of GB of deserialized filters —
@@ -350,13 +304,12 @@ _FILTER_CACHE: OrderedDict = OrderedDict()
 _FILTER_CACHE_BYTES = [0]
 
 
-def _cached_filter(root: str, cycle: int, bucket: int):
-    key = (root, cycle, bucket)
-    if key in _FILTER_CACHE:
-        _FILTER_CACHE.move_to_end(key)
-        return _FILTER_CACHE[key]
-    f = load_bucket_filter(root, cycle, bucket)
-    _FILTER_CACHE[key] = f
+def _cached_filter(path: str):
+    if path in _FILTER_CACHE:
+        _FILTER_CACHE.move_to_end(path)
+        return _FILTER_CACHE[path]
+    f = load_bucket_filter(path)
+    _FILTER_CACHE[path] = f
     _FILTER_CACHE_BYTES[0] += 0 if f is None else f.nbytes
     while len(_FILTER_CACHE) > 1 and (
         len(_FILTER_CACHE) > _CACHE_CAP
@@ -386,12 +339,12 @@ def split_by_filter(cand: "DataFrame", io, through_cycle: int, cfg):
 
     from . import schemas
 
-    last_build, loc = filter_locations(io, through_cycle)
+    last_build, loc = io.snapshot(through_cycle).filters()
     if last_build == 0:
         # no filters yet: everything is maybe-seen (plain exact anti-join)
         return cand.limit(0), cand, None
 
-    root = io.root
+    paths = {b: f.path for b, f in loc.items()}
     out_schema = T.StructType(
         cand.schema.fields + [T.StructField("maybe_seen", T.BooleanType())]
     )
@@ -413,8 +366,8 @@ def split_by_filter(cand: "DataFrame", io, through_cycle: int, cfg):
             out = _np.ones(len(pdf), dtype=bool)  # no filter => maybe-seen
             h_all = pdf["url_hash"].to_numpy().astype(_np.int64).view(_np.uint64)
             for b, idx in pdf.groupby("host_bucket").indices.items():
-                c = loc.get(int(b))
-                f = _cached_filter(root, c, int(b)) if c is not None else None
+                p = paths.get(int(b))
+                f = _cached_filter(p) if p is not None else None
                 if f is not None:
                     out[idx] = f.contains_many(h_all[idx])
             pdf = pdf.copy()
@@ -512,40 +465,31 @@ def _insert_files(f, files: list) -> bool:
     return True
 
 
-def _row_count(files: list) -> int:
-    """Rows in parquet files, from their footers (no data read)."""
-    import pyarrow.parquet as _pq
-
-    return sum(_pq.ParquetFile(p).metadata.num_rows for p in files)
-
-
-def _bucket_row(root: str, bucket: int, prev_cycle, delta_dirs: list,
-                full_dirs: list) -> dict:
+def _bucket_row(bucket: int, prev, delta: list, full: list) -> dict:
     """Build one bucket's filter row (executor side) — the one rule every
-    row of ``rebuild_filters`` is built by:
+    row of ``rebuild_filters`` is built by. ``prev`` is the path of the
+    bucket's previous row (None when none is expected); ``delta`` and
+    ``full`` are its url_seen files as (path, rows), the rows taken from
+    the snapshot:
 
-    - ``prev_cycle`` None (no previous row expected): a fresh filter from
-      the delta files — a cuckoo sized 4x their rows up to
-      _CUCKOO_MAX_ITEMS, else a bloom;
+    - ``prev`` None: a fresh filter from the delta files — a cuckoo sized
+      4x their rows up to _CUCKOO_MAX_ITEMS, else a bloom;
     - the previous row loads: the delta files are inserted into it (none
       for a consolidation carry, whose bytes are then copied unchanged);
     - the previous row does not load (a crashed consolidation pruned it),
-      or the cuckoo overflows: a bloom over the bucket's FULL url_seen,
-      sized by its files' footer row counts."""
-    delta = _bucket_files(delta_dirs, bucket)
-    if prev_cycle is None:
-        n = _row_count(delta)
+      or the cuckoo overflows: a bloom over the bucket's FULL url_seen."""
+    if prev is None:
+        n = sum(rows for _, rows in delta)
         if n <= _CUCKOO_MAX_ITEMS:
             f = CuckooFilter.with_capacity(max(n * 4, 1024))
         else:
             f = BloomFilter.with_capacity(n)
     else:
-        f = load_bucket_filter(root, prev_cycle, bucket, writable=bool(delta))
+        f = load_bucket_filter(prev, writable=bool(delta))
     status = "ok" if delta else "carried"
-    if f is None or not _insert_files(f, delta):
-        full = _bucket_files(full_dirs, bucket)
-        f = BloomFilter.with_capacity(_row_count(full))
-        _insert_files(f, full)
+    if f is None or not _insert_files(f, [p for p, _ in delta]):
+        f = BloomFilter.with_capacity(sum(rows for _, rows in full))
+        _insert_files(f, [p for p, _ in full])
         status = "bloom"
     r = f.to_row()
     r["host_bucket"] = bucket
@@ -567,14 +511,17 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     - previous row expected but unreadable, or a cuckoo that overflows: a
       bloom over the bucket's FULL url_seen.
 
-    Untouched buckets carry forward LOGICALLY (filter_locations) — nothing
-    is copied. Returns the manifest meta update:
-    {"filters": total buckets covered, "filters_buckets": written this cycle}.
+    Untouched buckets carry forward LOGICALLY (``Snapshot.filters``) —
+    nothing is copied. Returns the manifest meta update: {"filters": total
+    buckets covered, "filters_files": the files written this cycle, as
+    ``TableIO.commit`` lists a table's}, plus "filters_full" when the build
+    covered every data-bearing bucket.
 
     ``consolidate`` (the filters analog of url_seen_base compaction, run on
     the same cadence): re-emit every untouched bucket's row into THIS
-    cycle's delta, then delete all older filters/cycle dirs. Without it the
-    logical carry-forward pins arbitrarily old delta dirs forever.
+    cycle's delta, then delete the older filters/cycle dirs the snapshot
+    names. Without it the logical carry-forward pins arbitrarily old delta
+    dirs forever.
     Crash-safe: a consolidation that dies after the prune but before its
     manifest update leaves the previous manifest pointing at pruned rows.
     A reader gets None for them and classifies the bucket maybe-seen (the
@@ -584,8 +531,8 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     """
     from pyspark.sql import types as T
 
-    prev_found, prev_loc = filter_locations(io, cycle - 1)
-    root = io.root
+    prev = io.snapshot(cycle - 1)
+    prev_found, prev_loc = prev.filters()
 
     # Insert EVERY committed delta the previous filter rows don't cover — not
     # just this cycle's. A run's final cycle skips the build
@@ -594,25 +541,36 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     # intervening deltas permanently missing from all later filters and
     # misclassify seen URLs as definitely-new (duplicate url_seen rows).
     # A from-scratch build (no filter committed yet) reads the CONSOLIDATED
-    # view instead: base + O(compact_every) tail dirs — the same row set as
-    # unioning every delta dir since cycle 1, without the O(cycles)
-    # dir-union pathology compaction exists to prevent.
+    # view instead: base + O(compact_every) tail deltas — the same row set
+    # as every delta since cycle 1, without the O(cycles) file union
+    # compaction exists to prevent.
     #
     # CO-LOCATE instead of shuffle (guide §8): url_seen is committed
     # hive-partitioned by host_bucket, so the source is already laid out
-    # one-dir-per-bucket on disk. The driver ships only the dir lists and
-    # lists the touched buckets (no file opened, no Spark job); each task
-    # globs its buckets' files and streams their row groups straight into
-    # the filters, one bucket at a time. Split-safety is by construction:
-    # a task owns whole buckets, never a byte range of one.
-    full_dirs = io.appended_dirs("url_seen", cycle)
+    # one-dir-per-bucket on disk. The driver takes each touched bucket's
+    # files and row counts from the snapshot (no file opened, no Spark
+    # job) and ships them in the closure; each task streams its buckets'
+    # row groups straight into the filters, one bucket at a time.
+    # Split-safety is by construction: a task owns whole buckets, never a
+    # byte range of one.
+    snap = io.snapshot(cycle)
+    base, deltas = snap.appended("url_seen")
+    full = _by_bucket(base + deltas)
     if prev_found == 0:
-        delta_dirs = full_dirs
+        delta = full
     else:
-        delta_dirs = io.delta_range_dirs("url_seen", prev_found + 1, cycle)
-    buckets = _listed_buckets(delta_dirs)
+        delta = _by_bucket(snap.deltas("url_seen", prev_found + 1, cycle))
+    buckets = set(delta)
     if consolidate:
         buckets |= set(prev_loc)
+    work = {
+        b: (
+            prev_loc[b].path if b in prev_loc else None,
+            delta.get(b, []),
+            full.get(b, []),
+        )
+        for b in buckets
+    }
 
     def bucket_batches(batches):
         import pandas as _pd
@@ -620,9 +578,7 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
         # one frame per bucket: a packed task holds one filter at a time
         for pdf in batches:
             for b in pdf["host_bucket"]:
-                r = _bucket_row(
-                    root, int(b), prev_loc.get(int(b)), delta_dirs, full_dirs
-                )
+                r = _bucket_row(int(b), *work[int(b)])
                 yield _pd.DataFrame([r], columns=_ROW_COLS)
 
     rel = f"filters/cycle={cycle}"
@@ -637,31 +593,32 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     )
     # what got written is read back from the layout, never assumed from
     # what was submitted
-    written = _listed_buckets([os.path.join(root, rel)])
+    files = io._written_files(rel)
+    written = {bucket_of(p) for p, _rows, _bytes in files}
 
     if consolidate:
         # older dirs now redundant: every live bucket has a row at `cycle`
         import shutil as _shutil
 
-        fdir = os.path.join(root, "filters")
-        for n in os.listdir(fdir):
-            if n.startswith("cycle=") and int(n.split("=")[1]) < cycle:
-                _shutil.rmtree(os.path.join(fdir, n), ignore_errors=True)
+        for c in prev.filter_cycles():
+            _shutil.rmtree(
+                os.path.join(io.root, "filters", f"cycle={c}"),
+                ignore_errors=True,
+            )
         # consolidation leaves every live bucket with a row at this cycle:
         # a full snapshot
         return {
             "filters": len(written),
-            "filters_buckets": sorted(written),
+            "filters_files": files,
             "filters_full": True,
         }
 
-    covered = set(prev_loc) | written
     meta = {
-        "filters": len(covered),
-        "filters_buckets": sorted(written),
+        "filters": len(set(prev_loc) | written),
+        "filters_files": files,
     }
     if prev_found == 0:
         # built from deltas 1..cycle -> covers every data-bearing bucket;
-        # lets filter_locations stop here
+        # ends Snapshot.filter_cycles here
         meta["filters_full"] = True
     return meta

@@ -203,6 +203,9 @@ class CycleResult:
     scheduled_rows: int
     manifest: dict
     lineage: list | None = None
+    # wall seconds of each table write (TableIO.commit), kept out of the
+    # manifest so the committed bytes depend only on the inputs
+    write_secs: dict | None = None
 
 
 class FrontierScheduler:
@@ -276,12 +279,12 @@ class FrontierScheduler:
         )
 
     def _latest_host_rank(self, cycle: int) -> tuple[int, DataFrame] | None:
-        """Newest committed host_rank table at a cycle <= cycle-1 (manifest
-        walk only — no data reads until the caller joins it). Returns
+        """Newest committed host_rank table at a cycle <= cycle-1 (from the
+        store's snapshot — no data reads until the caller joins it). Returns
         (build_cycle, df) so consumers can cache per-build work — the
         broadcast-gate count in particular runs once per rank BUILD, not
         once per scheduling cycle."""
-        c = self.io.latest_table_cycle("host_rank", cycle - 1)
+        c = self.io.snapshot(cycle - 1).table_cycle("host_rank")
         if c is None:
             return None
         return c, self.io.read_cycle(
@@ -775,7 +778,9 @@ class FrontierScheduler:
         # concurrent write plans, code-generates and ships only its own
         # short tail. The handlers' warm names follow, for the same reason
         # (corpus_handler's checkpoints feed more than one of its writes).
-        manifest = io.commit(cycle, tables, meta=meta, warm=tuple(warm))
+        manifest, write_secs = io.commit(
+            cycle, tables, meta=meta, warm=tuple(warm)
+        )
 
         if cfg.use_seen_filter and build_filters:
             # filter sidecars are advisory: they only serve LATER cycles'
@@ -804,6 +809,7 @@ class FrontierScheduler:
             scheduled_rows=n_sched,
             manifest=manifest,
             lineage=lin_rows,
+            write_secs=write_secs,
         )
 
     def run(self, cycles: int, start_cycle: int | None = None) -> list[CycleResult]:

@@ -12,14 +12,28 @@ fully successful pass (call site container_crawler/__init__.py
 Crawler.handle_container). Here the unit of commit is a whole crawl cycle:
 data dirs are written first, then a manifest JSON is atomically renamed into
 `_manifests/` — a cycle either exists completely or not at all, and resume
-(`latest_cycle`) never sees a torn write. Crash mid-cycle leaves orphan data
-dirs that the next commit ignores (manifest is the source of truth).
+(`latest_cycle`) never sees a torn write.
+
+The manifest is the only place the engine learns what is on disk (the
+Delta Lake log, VLDB 2020): manifest k lists, per table, the data files
+cycle k wrote (path relative to the table's cycle dir, rows, bytes), and
+the filter build adds its own files through ``commit_meta_update``. One
+``Snapshot`` of the parsed manifests answers every read's question —
+which files, written by which cycle — so no read lists a directory. The
+manifests are parsed once per ``TableIO`` and cached: a published
+manifest changes only through this instance's own ``commit_meta_update``.
+
+Single writer: one ``TableIO`` at a time owns its root. Opening one
+removes what a crash left behind — the ``_tmp/`` write dirs, unpublished
+manifest tmp files, and every ``<table>/cycle=k`` dir that no manifest
+names — and leaves ``pages_canon*`` alone.
 
 Table kinds:
 - carry   (pending):       full rewrite each cycle; read exactly cycle k
-- append  (url_seen, lineage, resolved): per-cycle deltas; read = union of
-          committed deltas ≤ k, with periodic consolidation ("compaction")
-          so the union never grows unboundedly at 10^10-URL scale
+- append  (url_seen, lineage, resolved): per-cycle deltas; read = newest
+          consolidated base ≤ k plus the deltas after it; the periodic
+          consolidation ("compaction") keeps that union bounded at
+          10^10-URL scale
 - percycle (scheduled, discoveries): owned by a single cycle
 """
 
@@ -30,13 +44,139 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
+
+
+def bucket_of(path: str) -> int:
+    """The ``host_bucket`` of a file under a bucket-partitioned dir."""
+    return int(path.rsplit("host_bucket=", 1)[1].split("/", 1)[0])
+
+
+class DataFile(NamedTuple):
+    """One committed parquet file: the cycle that wrote it, its absolute
+    path and its row count (read from its footer at commit)."""
+
+    cycle: int
+    path: str
+    rows: int
+
+
+class Snapshot:
+    """The committed store as of one cycle: the parsed manifests ≤ it."""
+
+    def __init__(self, root: str, manifests: dict):
+        self.root = root
+        self.manifests = manifests  # cycle -> manifest
+        self.cycle = max(manifests, default=0)
+
+    def table_cycle(self, name: str) -> int | None:
+        """Newest cycle that committed table ``name`` (None if none did)."""
+        return max(
+            (c for c, m in self.manifests.items() if name in m["tables"]),
+            default=None,
+        )
+
+    def _entries(self, rel: str, cycle: int, entries: list) -> list:
+        d = os.path.join(self.root, rel)
+        return [DataFile(cycle, os.path.join(d, p), rows)
+                for p, rows, _bytes in entries]
+
+    def files(self, name: str, cycle: int) -> list:
+        """The data files table ``name`` committed at ``cycle``."""
+        m = self.manifests.get(cycle)
+        if m is None or name not in m["tables"]:
+            return []
+        return self._entries(m["tables"][name], cycle, m["files"][name])
+
+    def deltas(self, name: str, lo: int, hi: int) -> list:
+        """Delta files of an append table committed in [lo, hi]."""
+        return [f for c in range(lo, hi + 1) for f in self.files(name, c)]
+
+    def appended(self, name: str, since: int = 1) -> tuple:
+        """(base files, delta files) of an append table: the newest
+        consolidated base, then the deltas after it.
+
+        ``since`` restricts them to files that can hold rows written at
+        cycle >= since. The delta of cycle j holds exclusively rows
+        stamped j, so deltas before ``since`` are skipped wholesale, and
+        so is a base older than ``since`` (it can only hold rows stamped
+        <= its own cycle). A base AT OR AFTER ``since`` is included whole
+        — it folds older rows in, so callers must still filter on the
+        row's cycle column. This is the recrawl-TTL scan path: the
+        per-cycle blocking set reads O(ttl) cycles of files instead of
+        the full 10^10-row seen history."""
+        base_cycle = self.table_cycle(f"{name}_base")
+        base, start = [], since
+        if base_cycle is not None:
+            if base_cycle >= since:
+                base = self.files(f"{name}_base", base_cycle)
+            start = max(since, base_cycle + 1)
+        return base, self.deltas(name, start, self.cycle)
+
+    def filter_cycles(self) -> list:
+        """Cycles whose filter build is still consulted, newest first. A
+        "filters_full" build (its inserts covered every delta from cycle
+        1, or it consolidated) covered every data-bearing bucket, so it
+        ends the list."""
+        out = []
+        for c in sorted(self.manifests, reverse=True):
+            meta = self.manifests[c].get("meta", {})
+            if meta.get("filters") is None:
+                continue
+            out.append(c)
+            if meta.get("filters_full"):
+                break
+        return out
+
+    def filters(self) -> tuple:
+        """(newest build cycle or 0, {bucket -> its newest filter file}).
+        The map is the logical carry-forward: a bucket missing from newer
+        builds had no url_seen rows since its file's cycle, so that file
+        still covers it through the newest build."""
+        cycles = self.filter_cycles()
+        loc: dict = {}
+        for c in cycles:
+            for f in self._entries(
+                f"filters/cycle={c}", c,
+                self.manifests[c]["meta"]["filters_files"],
+            ):
+                loc.setdefault(bucket_of(f.path), f)
+        return (cycles[0] if cycles else 0), loc
 
 
 class TableIO:
     def __init__(self, root: str):
         self.root = os.path.abspath(root)
-        os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
-        os.makedirs(os.path.join(root, "_tmp"), exist_ok=True)
+        mdir = os.path.join(self.root, "_manifests")
+        os.makedirs(mdir, exist_ok=True)
+        self._manifests: dict = {}
+        for n in os.listdir(mdir):
+            p = os.path.join(mdir, n)
+            if n.endswith(".json"):
+                with open(p) as f:
+                    self._manifests[int(n.split(".")[1])] = json.load(f)
+            elif ".json.tmp." in n:
+                os.remove(p)  # a publish that died before its rename
+        self._sweep()
+
+    def _sweep(self) -> None:
+        """Remove what no manifest names: the failed writes under
+        ``_tmp/`` and every unnamed ``<table>/cycle=k`` dir (a crashed
+        cycle's tables, a crashed filter build's rows)."""
+        named = set()
+        for c, m in self._manifests.items():
+            named.update(m["tables"].values())
+            if m.get("meta", {}).get("filters") is not None:
+                named.add(f"filters/cycle={c}")
+        shutil.rmtree(os.path.join(self.root, "_tmp"), ignore_errors=True)
+        os.makedirs(os.path.join(self.root, "_tmp"))
+        for name in os.listdir(self.root):
+            d = os.path.join(self.root, name)
+            if name.startswith(("_", "pages_canon")) or not os.path.isdir(d):
+                continue
+            for sub in os.listdir(d):
+                if sub.startswith("cycle=") and f"{name}/{sub}" not in named:
+                    shutil.rmtree(os.path.join(d, sub))
 
     # ---- manifests -----------------------------------------------------
 
@@ -44,20 +184,34 @@ class TableIO:
         return os.path.join(self.root, "_manifests", f"manifest.{cycle:06d}.json")
 
     def manifest(self, cycle: int) -> dict | None:
-        p = self._manifest_path(cycle)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return self._manifests.get(cycle)
 
     def latest_cycle(self) -> int:
-        d = os.path.join(self.root, "_manifests")
-        cycles = [
-            int(n.split(".")[1])
-            for n in os.listdir(d)
-            if n.startswith("manifest.") and n.endswith(".json")
-        ]
-        return max(cycles, default=0)
+        return max(self._manifests, default=0)
+
+    def snapshot(self, cycle: int) -> Snapshot:
+        """The committed store as of ``cycle``."""
+        return Snapshot(
+            self.root,
+            {c: m for c, m in self._manifests.items() if c <= cycle},
+        )
+
+    def _publish(self, cycle: int, entry: dict) -> dict:
+        """Atomically publish manifest ``cycle`` — the one place that
+        updates the manifest cache, and only once the rename is done."""
+        path = self._manifest_path(cycle)
+        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(entry, f, separators=(",", ":"))
+            # fsync BEFORE the rename: on delayed-allocation filesystems a
+            # power loss after the (journaled) rename but before the data
+            # blocks land leaves a zero-length manifest — which would brick
+            # resume, violating "a cycle exists completely or not at all"
+            f.flush()
+            os.fsync(f.fileno())
+        os.rename(tmp, path)
+        self._manifests[cycle] = entry
+        return entry
 
     # ---- writes ----------------------------------------------------------
 
@@ -75,13 +229,32 @@ class TableIO:
         os.rename(tmp, final)
         return rel
 
+    def _written_files(self, rel: str) -> list:
+        """The data files of a just-written dir as manifest entries
+        ``[path relative to the dir, rows, bytes]``, sorted by path; rows
+        from each file's footer, bytes from its stat."""
+        import pyarrow.parquet as pq
+
+        d = os.path.join(self.root, rel)
+        out = []
+        for dirpath, _dirs, names in os.walk(d):
+            for n in names:
+                if n.endswith(".parquet") and not n.startswith("."):
+                    p = os.path.join(dirpath, n)
+                    out.append([
+                        os.path.relpath(p, d),
+                        pq.read_metadata(p).num_rows,
+                        os.path.getsize(p),
+                    ])
+        return sorted(out)
+
     def commit(
         self,
         cycle: int,
         tables: dict,
         meta: dict | None = None,
         warm: tuple = (),
-    ) -> dict:
+    ) -> tuple:
         """Write every table of the cycle CONCURRENTLY (Spark schedules
         independent jobs from separate threads), then atomically publish the
         manifest — the all-or-nothing checkpoint barrier.
@@ -92,24 +265,26 @@ class TableIO:
         follow read warm blocks instead of racing to compute them (neither
         dedupes concurrent materialization). Under AQE a lazy
         ``localCheckpoint`` has already run its shuffle-map stages when it
-        was created; the warm write runs only its final stage."""
+        was created; the warm write runs only its final stage.
+
+        Returns (manifest, {table: write wall seconds}). The seconds stay
+        out of the manifest, so the committed bytes depend only on the
+        inputs: each write forces its plan (with the warm ordering it
+        carries its stage's remaining cost), which makes them a per-stage
+        cost attribution measured with no extra action."""
         from concurrent.futures import ThreadPoolExecutor
 
         entry: dict = {"cycle": cycle, "parent": cycle - 1, "tables": {}}
-        # per-table wall seconds, recorded in the manifest: the writes
-        # force their plans (with the warm ordering, each write carries
-        # its stage's remaining cost; shuffle-map stages that a lazy
-        # checkpoint ran under AQE when it was created are not in it), so
-        # this is the machine-diffable per-stage attribution benchrun
-        # aggregates — measured from the real writes, no extra actions
-        entry["write_secs"] = {}
+        files: dict = {}
+        write_secs: dict = {}
 
         def write_one(item):
             name, (df, part) = item
             rel = f"{name}/cycle={cycle}"
             t0 = time.time()
             self._write_df(df, rel, part)
-            entry["write_secs"][name] = round(time.time() - t0, 2)
+            write_secs[name] = round(time.time() - t0, 2)
+            files[name] = self._written_files(rel)
             return name, rel
 
         for name in warm:
@@ -121,50 +296,20 @@ class TableIO:
             with ThreadPoolExecutor(max_workers=len(rest)) as ex:
                 for name, rel in ex.map(write_one, rest.items()):
                     entry["tables"][name] = rel
-        entry["committed_ts"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        entry["files"] = {n: files[n] for n in entry["tables"]}
         if meta:
             entry["meta"] = meta
-        tmp = self._manifest_path(cycle) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f, indent=1)
-            # fsync BEFORE the rename: on delayed-allocation filesystems a
-            # power loss after the (journaled) rename but before the data
-            # blocks land leaves a zero-length manifest — which would brick
-            # resume, violating "a cycle exists completely or not at all"
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._manifest_path(cycle))
-        return entry
+        return self._publish(cycle, entry), write_secs
 
     def commit_meta_update(self, cycle: int, meta_update: dict) -> dict:
         """Merge keys into an existing manifest's meta (atomic rewrite)."""
-        entry = self.manifest(cycle)
-        assert entry is not None, f"no manifest for cycle {cycle}"
-        entry.setdefault("meta", {}).update(meta_update)
-        tmp = self._manifest_path(cycle) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f, indent=1)
-            # fsync BEFORE the rename: on delayed-allocation filesystems a
-            # power loss after the (journaled) rename but before the data
-            # blocks land leaves a zero-length manifest — which would brick
-            # resume, violating "a cycle exists completely or not at all"
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._manifest_path(cycle))
-        return entry
+        m = self.manifest(cycle)
+        assert m is not None, f"no manifest for cycle {cycle}"
+        return self._publish(
+            cycle, {**m, "meta": {**m.get("meta", {}), **meta_update}}
+        )
 
     # ---- reads ----------------------------------------------------------
-
-    def latest_table_cycle(self, name: str, through_cycle: int) -> int | None:
-        """Most recent cycle <= through_cycle whose manifest committed
-        table ``name`` (None if never committed). Metadata walk only —
-        used e.g. to locate the pinned ANN quantizer (ann_centroids) or
-        the last near-dup closure (nd_components)."""
-        for c in range(through_cycle, 0, -1):
-            m = self.manifest(c)
-            if m and name in m["tables"]:
-                return c
-        return None
 
     def _empty(self, spark, schema):
         """An empty frame of ``schema`` from an empty Arrow table: a
@@ -176,13 +321,22 @@ class TableIO:
             to_arrow_schema(schema).empty_table(), schema
         )
 
+    def _scan(self, spark, schema, files: list, base: str):
+        """One scan of listed files; partition values (``host_bucket``,
+        ``cell``, ``cycle``) come from their paths below ``base``."""
+        if not files:
+            return self._empty(spark, schema)
+        return (
+            spark.read.schema(schema)
+            .option("basePath", base)
+            .parquet(*(f.path for f in files))
+        )
+
     def read_cycle(self, spark, name: str, cycle: int, schema):
         """Read a carry/percycle table exactly at cycle k."""
-        m = self.manifest(cycle)
-        if m is None or name not in m["tables"]:
-            return self._empty(spark, schema)
-        return spark.read.schema(schema).parquet(
-            os.path.join(self.root, m["tables"][name])
+        return self._scan(
+            spark, schema, self.snapshot(cycle).files(name, cycle),
+            os.path.join(self.root, name, f"cycle={cycle}"),
         )
 
     def read_cycle_rows(self, name: str, cycle: int, schema) -> list[dict]:
@@ -192,92 +346,47 @@ class TableIO:
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        m = self.manifest(cycle)
-        if m is None or name not in m["tables"]:
-            return []
+        files = self.snapshot(cycle).files(name, cycle)
         return ds.dataset(
-            os.path.join(self.root, m["tables"][name]),
+            [f.path for f in files],
             format="parquet",
             schema=to_arrow_schema(schema),
         ).to_table().to_pylist()
 
-    def appended_dirs(
-        self, name: str, through_cycle: int, since: int = 1
-    ) -> list[str]:
-        """Committed dirs of an append table through cycle k (newest base
-        ≤ k, then the deltas after it) — the path walk behind
-        ``read_appended``, exposed so metadata-driven consumers (e.g. the
-        per-bucket filter build) can reach the files without a Spark scan.
-
-        ``since`` restricts the walk to dirs that can hold rows written at
-        cycle >= since. The delta of cycle j holds exclusively rows
-        stamped j, so deltas before ``since`` are skipped wholesale, and
-        so is a consolidated base older than ``since`` (it can only hold
-        rows stamped <= its own cycle). A base AT OR AFTER ``since`` is
-        included whole — it folds older rows in, so callers must still
-        filter on the row's cycle column. This is the recrawl-TTL scan
-        path: the per-cycle blocking set reads O(ttl) cycle dirs instead
-        of the full 10^10-row seen history."""
-        paths = []
-        start = since
-        base_name = f"{name}_base"
-        for c in range(through_cycle, 0, -1):
-            m = self.manifest(c)
-            if m and base_name in m["tables"]:
-                if c >= since:
-                    paths.append(
-                        os.path.join(self.root, m["tables"][base_name])
-                    )
-                    start = c + 1
-                break
-        for c in range(start, through_cycle + 1):
-            m = self.manifest(c)
-            if m and name in m["tables"]:
-                paths.append(os.path.join(self.root, m["tables"][name]))
-        return paths
+    def _read_deltas(self, spark, name: str, schema, base: list, deltas: list):
+        """base ∪ deltas in at most two scans. The base is read with
+        ``basePath`` at its own cycle dir: at the table root, the path's
+        ``cycle`` would replace the rows' own ``cycle`` column (a base
+        folds older cycles in). Every delta's rows carry its own cycle,
+        so the deltas share one scan at the table root, and the
+        discovered ``cycle`` is dropped where the schema has none."""
+        scans = []
+        if base:
+            scans.append(self._scan(
+                spark, schema, base,
+                os.path.join(self.root, f"{name}_base", f"cycle={base[0].cycle}"),
+            ))
+        if deltas:
+            d = self._scan(spark, schema, deltas, os.path.join(self.root, name))
+            if "cycle" not in schema.fieldNames():
+                d = d.drop("cycle")
+            scans.append(d)
+        if not scans:
+            return self._empty(spark, schema)
+        return scans[0] if len(scans) == 1 else scans[0].unionByName(scans[1])
 
     def read_appended(
         self, spark, name: str, through_cycle: int, schema, since: int = 1
     ):
-        """Union of committed deltas of an append table up to cycle k,
-        starting from the most recent consolidated base ≤ k (if any);
-        ``since`` as in ``appended_dirs``."""
-        return self._union_paths(
-            spark, self.appended_dirs(name, through_cycle, since), schema
-        )
-
-    def _union_paths(self, spark, paths, schema):
-        """Union several delta dirs. Each dir is itself hive-partitioned (by
-        host_bucket), so they must be loaded separately — passing sibling
-        `cycle=k` dirs in one load trips partition discovery."""
-        if not paths:
-            return self._empty(spark, schema)
-        dfs = [spark.read.schema(schema).parquet(p) for p in paths]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    def delta_range_dirs(
-        self, name: str, from_cycle: int, to_cycle: int
-    ) -> list[str]:
-        """Committed delta dirs of an append table in [from_cycle,
-        to_cycle] (path walk behind ``read_delta_range``)."""
-        paths = []
-        for c in range(from_cycle, to_cycle + 1):
-            m = self.manifest(c)
-            if m and name in m["tables"]:
-                paths.append(os.path.join(self.root, m["tables"][name]))
-        return paths
+        """An append table as of cycle k: the newest consolidated base ≤ k
+        (if any) and the deltas after it; ``since`` as in
+        ``Snapshot.appended``."""
+        base, deltas = self.snapshot(through_cycle).appended(name, since)
+        return self._read_deltas(spark, name, schema, base, deltas)
 
     def read_delta_range(
         self, spark, name: str, from_cycle: int, to_cycle: int, schema
     ):
-        """Union of an append table's deltas in [from_cycle, to_cycle]."""
-        return self._union_paths(
-            spark, self.delta_range_dirs(name, from_cycle, to_cycle), schema
-        )
-
-    # URL-seen membership filters are ordinary parquet rows under
-    # filters/cycle=<k>/ written through _write_df and located via manifest
-    # meta ("filters", "filters_buckets") — see membership.filter_locations.
+        """An append table's deltas in [from_cycle, to_cycle]."""
+        deltas = self.snapshot(to_cycle).deltas(name, from_cycle, to_cycle)
+        return self._read_deltas(spark, name, schema, [], deltas)

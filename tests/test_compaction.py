@@ -11,12 +11,33 @@ from frontier_engine.golden import build_engine, diff_traces, ref_trace, spark_t
 from frontier_engine.refspec import read_fixture_rows, run
 
 
-def test_compacted_seen_matches_refspec(spark, tiny_fixture_dir, tmp_path_factory):
+def test_compacted_seen_matches_refspec(
+    spark, tiny_fixture_dir, tmp_path_factory, monkeypatch
+):
+    import builtins
+
+    from frontier_engine import tableio
+
     fix = FixtureConfig(n_urls=2000)
     cfg = dataclasses.replace(config_for_fixture(fix), compact_every=2)
     work = str(tmp_path_factory.mktemp("engine-compact"))
     eng = build_engine(spark, tiny_fixture_dir, work, cfg)
-    eng.run(cycles=4)
+
+    # manifest JSON reads per cycle: a steady cycle must not re-read the
+    # history, so the count may not grow with the cycle number
+    reads: list = []
+
+    def counting_open(path, mode="r", *a, **kw):
+        if str(path).endswith(".json") and "r" in mode:
+            reads[-1] += 1
+        return builtins.open(path, mode, *a, **kw)
+
+    monkeypatch.setattr(tableio, "open", counting_open, raising=False)
+    for k in range(1, 5):  # what eng.run(cycles=4) runs
+        reads.append(0)
+        eng.run_cycle(k, build_filters=k < 4)
+    monkeypatch.undo()
+    assert reads[1:] == [reads[1]] * 3, reads
 
     # compaction actually happened: manifests 2 and 4 carry url_seen_base
     m2, m4 = eng.io.manifest(2), eng.io.manifest(4)

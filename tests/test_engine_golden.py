@@ -63,12 +63,10 @@ def test_filter_equivalence(spark, tiny_fixture_dir, golden, tmp_path_factory):
     assert diff_traces(st_on, st_off) == []
     # non-vacuity: the ON run must actually have had filters to consult —
     # if filter wiring breaks (never built / invisible to
-    # filter_locations), split_by_filter routes everything down the exact
+    # the snapshot), split_by_filter routes everything down the exact
     # path and this becomes a comparison of two identical exact runs
-    from frontier_engine.membership import filter_locations
-
     assert eng_on.cfg.use_seen_filter
-    last_build, loc = filter_locations(eng_on.io, 2)
+    last_build, loc = eng_on.io.snapshot(2).filters()
     assert last_build > 0 and loc, (
         "ON run has no consultable filters — prefilter never engaged"
     )
@@ -474,8 +472,6 @@ def test_consolidation_resume_golden(
     import dataclasses
     import os as _os
 
-    from frontier_engine.membership import filter_locations
-
     fix = FixtureConfig(n_urls=2000)
     cfg = dataclasses.replace(config_for_fixture(fix), compact_every=2)
     work = str(tmp_path_factory.mktemp("engine-consol-resume"))
@@ -485,9 +481,9 @@ def test_consolidation_resume_golden(
 
     fdir = _os.path.join(eng.io.root, "filters")
     assert sorted(_os.listdir(fdir)) == ["cycle=2"]  # old dirs pruned
-    last_build, loc = filter_locations(eng.io, 2)
+    last_build, loc = eng.io.snapshot(2).filters()
     assert last_build == 2
-    assert loc and all(c == 2 for c in loc.values())  # ONLY cycle-2 reads
+    assert loc and all(f.cycle == 2 for f in loc.values())  # ONLY cycle-2 reads
 
     # fresh scheduler = fresh process; resume must continue identically
     eng2 = build_engine(spark, tiny_fixture_dir, work, cfg)
@@ -537,6 +533,9 @@ def test_filter_consolidation_crash_resume_golden(
     assert "filters" not in eng.io.manifest(2).get("meta", {})
 
     eng2 = build_engine(spark, tiny_fixture_dir, work, cfg)
+    # opening the store removed the crashed build's rows: no manifest
+    # names filters/cycle=2
+    assert not _os.path.exists(_os.path.join(fdir, "cycle=2"))
     assert eng2.io.latest_cycle() == 2
     for k in range(3, 7):
         eng2.run_cycle(k, build_filters=k < 6)
@@ -571,6 +570,8 @@ def test_orphan_dirs_from_crashed_commit_ignored(
     open(poison, "w").close()  # orphan contamination marker
 
     eng2 = build_engine(spark, tiny_fixture_dir, work, cfg)
+    # opening the store removed the dirs no manifest names
+    assert not _os.path.exists(_os.path.join(work, "scheduled", "cycle=2"))
     assert eng2.io.latest_cycle() == 1  # torn cycle invisible
     eng2.run_cycle(2, build_filters=False)
     assert not _os.path.exists(poison)  # orphan REPLACED, not appended to

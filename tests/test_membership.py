@@ -8,9 +8,29 @@ from frontier_engine.membership import (
     BloomFilter,
     CuckooFilter,
     filter_from_row,
-    filter_locations,
     load_bucket_filter,
 )
+from frontier_engine.tableio import bucket_of
+
+
+def _locations(io, cycle):
+    """(newest build cycle, {bucket -> cycle of its newest filter file})
+    from the store's snapshot."""
+    last_build, loc = io.snapshot(cycle).filters()
+    return last_build, {b: f.cycle for b, f in loc.items()}
+
+
+def _filter_at(io, cycle, bucket):
+    """The bucket's filter row written by the build of ``cycle``."""
+    return load_bucket_filter(next(
+        f.path for b, f in io.snapshot(cycle).filters()[1].items()
+        if b == bucket and f.cycle == cycle
+    ))
+
+
+def _buckets(meta):
+    """The buckets a filter build's meta update lists files for."""
+    return sorted(bucket_of(p) for p, _rows, _bytes in meta["filters_files"])
 
 
 def _hashes(n, seed=7):
@@ -105,14 +125,14 @@ def test_forced_overflow_rebuilds_bloom(spark, tmp_path):
 
     io.commit(1, {"url_seen": (seen_df(range(1000, 1100), 1, 1), ["host_bucket"])})
     io.commit_meta_update(1, membership.rebuild_filters(spark, io, 1, cfg))
-    f1 = load_bucket_filter(io.root, 1, 1)
+    f1 = _filter_at(io, 1, 1)
     assert f1.kind == "cuckoo"  # small delta -> cuckoo
 
     io.commit(
         2, {"url_seen": (seen_df(range(50_000, 70_000), 1, 2), ["host_bucket"])}
     )
     io.commit_meta_update(2, membership.rebuild_filters(spark, io, 2, cfg))
-    f2 = load_bucket_filter(io.root, 2, 1)
+    f2 = _filter_at(io, 2, 1)
     assert f2.kind == "bloom"  # overflowed cuckoo -> full bloom rebuild
 
     h = np.array(
@@ -165,18 +185,18 @@ def test_consolidation_rewrites_and_prunes(spark, tmp_path):
     )
     m2 = membership.rebuild_filters(spark, io, 2, cfg, consolidate=True)
     io.commit_meta_update(2, m2)
-    assert sorted(m2["filters_buckets"]) == [1, 2]  # carried bucket listed
+    assert _buckets(m2) == [1, 2]  # carried bucket listed
     assert m2["filters"] == 2
 
     # old dir pruned; everything resolves to cycle 2
     assert not _os.path.isdir(_os.path.join(io.root, "filters", "cycle=1"))
-    last_build, loc = filter_locations(io, 2)
+    last_build, loc = _locations(io, 2)
     assert (last_build, loc) == (2, {1: 2, 2: 2})
 
-    f1 = load_bucket_filter(io.root, 2, 1)
+    f1 = _filter_at(io, 2, 1)
     both = np.array(list(range(100)) + list(range(200, 250)), dtype=np.uint64)
     assert f1.contains_many(both).all()
-    f2 = load_bucket_filter(io.root, 2, 2)
+    f2 = _filter_at(io, 2, 2)
     assert f2.contains_many(np.arange(500, 600, dtype=np.uint64)).all()
 
 
@@ -220,7 +240,7 @@ def test_pruned_source_row_rebuilt_from_full_history(spark, tmp_path):
     )
     membership.rebuild_filters(spark, io, 2, cfg, consolidate=True)
     assert not _os.path.isdir(_os.path.join(io.root, "filters", "cycle=1"))
-    assert filter_locations(io, 2) == (1, {1: 1, 2: 1})  # stale, pruned
+    assert _locations(io, 2) == (1, {1: 1, 2: 1})  # stale, pruned
 
     io.commit(
         3, {"url_seen": (seen_df([(h, 2) for h in range(700, 750)], 3),
@@ -228,12 +248,12 @@ def test_pruned_source_row_rebuilt_from_full_history(spark, tmp_path):
     )
     m3 = membership.rebuild_filters(spark, io, 3, cfg)
     io.commit_meta_update(3, m3)
-    assert m3["filters_buckets"] == [1, 2]
+    assert _buckets(m3) == [1, 2]
     for b, seen in (
         (1, list(range(100)) + list(range(200, 250))),
         (2, list(range(500, 600)) + list(range(700, 750))),
     ):
-        f = load_bucket_filter(io.root, 3, b)
+        f = _filter_at(io, 3, b)
         missed = int((~f.contains_many(np.array(seen, dtype=np.uint64))).sum())
         assert missed == 0, (b, missed)
 
@@ -266,26 +286,26 @@ def test_empty_delta_cycle_does_not_crash_rebuild(spark, tmp_path):
     io.commit(2, {"url_seen": (seen_df([], 2), ["host_bucket"])})
     m2 = membership.rebuild_filters(spark, io, 2, cfg)
     io.commit_meta_update(2, m2)
-    assert m2["filters_buckets"] == []
+    assert _buckets(m2) == []
     assert m2["filters"] == 1  # bucket 1 still covered, carried logically
 
-    last_build, loc = filter_locations(io, 2)
+    last_build, loc = _locations(io, 2)
     assert (last_build, loc) == (2, {1: 1})
-    f = load_bucket_filter(io.root, loc[1], 1)
+    f = _filter_at(io, loc[1], 1)
     assert f.contains_many(np.arange(100, dtype=np.uint64)).all()
 
     # consolidation on an empty delta: carries the bucket physically
     io.commit(3, {"url_seen": (seen_df([], 3), ["host_bucket"])})
     m3 = membership.rebuild_filters(spark, io, 3, cfg, consolidate=True)
     io.commit_meta_update(3, m3)
-    assert m3["filters_buckets"] == [1]
-    g = load_bucket_filter(io.root, 3, 1)
+    assert _buckets(m3) == [1]
+    g = _filter_at(io, 3, 1)
     assert g.contains_many(np.arange(100, dtype=np.uint64)).all()
 
 
 def test_logical_carry_forward_no_copy(spark, tmp_path):
     """A bucket untouched at cycle 2 must NOT be rewritten: cycle 2's delta
-    holds only the changed bucket, and filter_locations resolves the
+    holds only the changed bucket, and the snapshot's filter map resolves the
     untouched bucket back to its cycle-1 row (the logical carry-forward that
     replaced the round-2 hardlink)."""
     from frontier_engine import membership, schemas
@@ -312,7 +332,7 @@ def test_logical_carry_forward_no_copy(spark, tmp_path):
     )
     m1 = membership.rebuild_filters(spark, io, 1, cfg)
     io.commit_meta_update(1, m1)
-    assert sorted(m1["filters_buckets"]) == [1, 2]
+    assert _buckets(m1) == [1, 2]
 
     # cycle 2 touches only bucket 1
     io.commit(
@@ -321,27 +341,31 @@ def test_logical_carry_forward_no_copy(spark, tmp_path):
     )
     m2 = membership.rebuild_filters(spark, io, 2, cfg)
     io.commit_meta_update(2, m2)
-    assert m2["filters_buckets"] == [1]
+    assert _buckets(m2) == [1]
     assert m2["filters"] == 2  # still covers both buckets
 
-    last_build, loc = filter_locations(io, 2)
+    last_build, loc = _locations(io, 2)
     assert last_build == 2
     assert loc == {1: 2, 2: 1}  # bucket 2 logically carried from cycle 1
 
     # bucket 2's row never re-written, still answers from cycle 1
-    assert load_bucket_filter(io.root, 2, 2) is None
-    f = load_bucket_filter(io.root, loc[2], 2)
+    import os as _os
+
+    assert not _os.path.exists(
+        _os.path.join(io.root, "filters", "cycle=2", "host_bucket=2")
+    )
+    f = _filter_at(io, loc[2], 2)
     assert f.contains_many(np.arange(500, 600, dtype=np.uint64)).all()
     # bucket 1's cycle-2 row includes both deltas (incremental upsert)
-    g = load_bucket_filter(io.root, loc[1], 1)
+    g = _filter_at(io, loc[1], 1)
     both = np.array(list(range(100)) + list(range(200, 250)), dtype=np.uint64)
     assert g.contains_many(both).all()
 
 
 def test_from_scratch_build_is_full_and_ends_walk(spark, tmp_path):
     """A build with no filter committed below it inserts every delta from
-    cycle 1 and marks itself filters_full; filter_locations then stops its
-    walk there, so an entry below a full build is never consulted."""
+    cycle 1 and marks itself filters_full; the snapshot's filter map then
+    stops there, so an entry below a full build is never consulted."""
     from frontier_engine import membership, schemas
     from frontier_engine.config import EngineConfig
     from frontier_engine.tableio import TableIO
@@ -362,13 +386,15 @@ def test_from_scratch_build_is_full_and_ends_walk(spark, tmp_path):
     m2 = membership.rebuild_filters(spark, io, 2, cfg)
     assert m2.get("filters_full") is True
     io.commit_meta_update(2, m2)
-    f = load_bucket_filter(io.root, 2, 1)
+    f = _filter_at(io, 2, 1)
     both = np.array(list(range(100)) + list(range(200, 250)), dtype=np.uint64)
     assert f.contains_many(both).all()  # cycle-1 rows covered too
 
     # an entry below the full build (bucket 3 at cycle 1) is not reached
-    io.commit_meta_update(1, {"filters": 1, "filters_buckets": [3]})
-    assert filter_locations(io, 2) == (2, {1: 2})
+    io.commit_meta_update(1, {
+        "filters": 1, "filters_files": [["host_bucket=3/part-0.parquet", 1, 1]],
+    })
+    assert _locations(io, 2) == (2, {1: 2})
 def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
     """More buckets than cores: the build (upserts and consolidation
     carries alike) runs in defaultParallelism tasks, not one task per
@@ -433,7 +459,7 @@ def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(membership, "_bucket_rows", one_bucket_per_task)
     single = bucket_files(build(str(tmp_path / "single")))
     for b in range(n):
-        f = load_bucket_filter(packed.root, 2, b)
+        f = _filter_at(packed, 2, b)
         seen = hashes(b, 1) + (hashes(b, 2) if b in (0, n - 1) else [])
         assert f.contains_many(np.array(seen, dtype=np.uint64)).all()
         data = [

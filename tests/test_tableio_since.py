@@ -1,7 +1,8 @@
-"""Unit semantics of TableIO.read_appended(..., since=): the recrawl-TTL
-scan path must read exactly the cycle dirs that can hold in-window rows —
-skipping pre-window deltas wholesale, skipping a base older than the
-window, and including (whole) a base at/after the window start."""
+"""Unit semantics of Snapshot.appended(..., since=) and the
+TableIO.read_appended(..., since=) scan built on it: the recrawl-TTL scan
+path must read exactly the files of the cycles that can hold in-window
+rows — skipping pre-window deltas wholesale, skipping a base older than
+the window, and including (whole) a base at/after the window start."""
 
 from frontier_engine import schemas
 from frontier_engine.tableio import TableIO
@@ -15,6 +16,12 @@ def _delta(spark, cycle, n=3):
 
 def _hashes(df):
     return sorted(r["url_hash"] for r in df.collect())
+
+
+def _cycles(io, through, since):
+    """(base cycles, delta cycles) whose files the snapshot selects."""
+    base, deltas = io.snapshot(through).appended("url_seen", since)
+    return sorted({f.cycle for f in base}), sorted({f.cycle for f in deltas})
 
 
 def test_read_appended_since_prunes_cycle_dirs(spark, tmp_path):
@@ -37,6 +44,7 @@ def test_read_appended_since_prunes_cycle_dirs(spark, tmp_path):
     assert len(_hashes(full)) == 15
 
     # window start AFTER the base: base skipped wholesale, deltas 4-5 only
+    assert _cycles(io, 5, 4) == ([], [4, 5])
     got = io.read_appended(spark, "url_seen", 5, schemas.URL_SEEN, since=4)
     assert _hashes(got) == _hashes(
         _delta(spark, 4).unionByName(_delta(spark, 5))
@@ -44,6 +52,7 @@ def test_read_appended_since_prunes_cycle_dirs(spark, tmp_path):
 
     # window start AT the base cycle: base included whole (it folds older
     # rows in — the caller's residual first_seen_cycle filter drops them)
+    assert _cycles(io, 5, 3) == ([3], [4, 5])
     got = io.read_appended(spark, "url_seen", 5, schemas.URL_SEEN, since=3)
     assert _hashes(got) == _hashes(full)
     assert _hashes(
@@ -55,9 +64,11 @@ def test_read_appended_since_prunes_cycle_dirs(spark, tmp_path):
     )
 
     # window start BEFORE the base: identical to read_appended
+    assert _cycles(io, 5, 1) == ([3], [4, 5])
     got = io.read_appended(spark, "url_seen", 5, schemas.URL_SEEN, since=1)
     assert _hashes(got) == _hashes(full)
 
     # through_cycle before the base: plain delta range
+    assert _cycles(io, 2, 2) == ([], [2])
     got = io.read_appended(spark, "url_seen", 2, schemas.URL_SEEN, since=2)
     assert _hashes(got) == _hashes(_delta(spark, 2))
