@@ -25,10 +25,10 @@ implied by sqlite ROWID monotonicity + the last_row checkpoint). Semantics:
   partitions" (``_bucket_row`` is the one rule);
 - carry-forward is LOGICAL, not physical: each cycle's ``filters`` delta
   holds only the buckets whose url_seen changed, and its manifest lists
-  the files it wrote; the driver derives a tiny ``bucket -> newest filter
-  file`` map from the store's snapshot (``Snapshot.filters``) and ships it
-  into the prefilter closure, so an untouched bucket keeps serving its old
-  row with zero bytes copied and no directory listed;
+  the files it wrote as any table's; the driver derives a tiny ``bucket ->
+  newest filter file`` map from the store's snapshot (``filter_files``)
+  and ships it into the prefilter closure, so an untouched bucket keeps
+  serving its old row with zero bytes copied and no directory listed;
 - a lagging filter is safe: if the newest filter build is older than the
   newest url_seen delta (a run's last cycle skips the build), the
   scheduler exact-joins "definite new" candidates against the missing
@@ -261,9 +261,38 @@ def filter_from_row(kind: str, n_bits, data: bytes, writable: bool = False):
 # parquet-row storage (rides TableIO's layout; executor reads via pyarrow)
 # ---------------------------------------------------------------------------
 
+def _filter_cycles(snap) -> list:
+    """Cycles whose filter build is still consulted, newest first. A
+    "filters_full" build (its inserts covered every delta from cycle 1,
+    or it consolidated) covered every data-bearing bucket, so it ends the
+    list."""
+    out = []
+    for c in sorted(snap.manifests, reverse=True):
+        m = snap.manifests[c]
+        if "filters" in m["tables"]:
+            out.append(c)
+            if m.get("meta", {}).get("filters_full"):
+                break
+    return out
+
+
+def filter_files(snap) -> tuple:
+    """(newest build cycle or 0, {bucket -> its newest filter file}) as
+    of the snapshot ``snap``. The map is the logical carry-forward: a
+    bucket missing from newer builds had no url_seen rows since its
+    file's cycle, so that file still covers it through the newest
+    build."""
+    cycles = _filter_cycles(snap)
+    loc: dict = {}
+    for c in cycles:
+        for f in snap.files("filters", c):
+            loc.setdefault(bucket_of(f.path), f)
+    return (cycles[0] if cycles else 0), loc
+
+
 def load_bucket_filter(path: str, writable: bool = False):
     """Read one bucket's filter row from its parquet file, named by the
-    snapshot (``Snapshot.filters``): exactly that file opens — no dataset
+    snapshot (``filter_files``): exactly that file opens — no dataset
     discovery over every bucket's files per call (that discovery was a
     measured 5x slowdown of the prefilter stage). Returns None if the
     file is gone (a crashed consolidation pruned its dir)."""
@@ -339,7 +368,7 @@ def split_by_filter(cand: "DataFrame", io, through_cycle: int, cfg):
 
     from . import schemas
 
-    last_build, loc = io.snapshot(through_cycle).filters()
+    last_build, loc = filter_files(io.snapshot(through_cycle))
     if last_build == 0:
         # no filters yet: everything is maybe-seen (plain exact anti-join)
         return cand.limit(0), cand, None
@@ -511,11 +540,11 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     - previous row expected but unreadable, or a cuckoo that overflows: a
       bloom over the bucket's FULL url_seen.
 
-    Untouched buckets carry forward LOGICALLY (``Snapshot.filters``) —
-    nothing is copied. Returns the manifest meta update: {"filters": total
-    buckets covered, "filters_files": the files written this cycle, as
-    ``TableIO.commit`` lists a table's}, plus "filters_full" when the build
-    covered every data-bearing bucket.
+    Untouched buckets carry forward LOGICALLY (``filter_files``) — nothing
+    is copied. The ``filters`` table of this cycle is staged for the
+    manifest (``TableIO.write_table``); returns the meta update that
+    publishes it: {"filters": total buckets covered}, plus "filters_full"
+    when the build covered every data-bearing bucket.
 
     ``consolidate`` (the filters analog of url_seen_base compaction, run on
     the same cadence): re-emit every untouched bucket's row into THIS
@@ -532,7 +561,7 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
     from pyspark.sql import types as T
 
     prev = io.snapshot(cycle - 1)
-    prev_found, prev_loc = prev.filters()
+    prev_found, prev_loc = filter_files(prev)
 
     # Insert EVERY committed delta the previous filter rows don't cover — not
     # just this cycle's. A run's final cycle skips the build
@@ -581,44 +610,36 @@ def rebuild_filters(spark, io, cycle: int, cfg, consolidate: bool = False) -> di
                 r = _bucket_row(int(b), *work[int(b)])
                 yield _pd.DataFrame([r], columns=_ROW_COLS)
 
-    rel = f"filters/cycle={cycle}"
     # hive-partition by host_bucket (each bucket in one task -> one file
-    # per bucket dir); readers then open exactly their bucket's file
-    io._write_df(
+    # per bucket dir); readers then open exactly their bucket's file. What
+    # got written is read back from the layout, never assumed from what
+    # was submitted.
+    files = io.write_table(
         _bucket_rows(spark, sorted(buckets)).mapInPandas(
             bucket_batches, T.StructType.fromDDL(_FILTER_ROW_SCHEMA_DDL)
         ),
-        rel,
+        "filters",
+        cycle,
         ["host_bucket"],
     )
-    # what got written is read back from the layout, never assumed from
-    # what was submitted
-    files = io._written_files(rel)
     written = {bucket_of(p) for p, _rows, _bytes in files}
 
     if consolidate:
         # older dirs now redundant: every live bucket has a row at `cycle`
         import shutil as _shutil
 
-        for c in prev.filter_cycles():
+        for c in _filter_cycles(prev):
             _shutil.rmtree(
-                os.path.join(io.root, "filters", f"cycle={c}"),
+                os.path.join(io.root, prev.manifests[c]["tables"]["filters"]),
                 ignore_errors=True,
             )
         # consolidation leaves every live bucket with a row at this cycle:
         # a full snapshot
-        return {
-            "filters": len(written),
-            "filters_files": files,
-            "filters_full": True,
-        }
+        return {"filters": len(written), "filters_full": True}
 
-    meta = {
-        "filters": len(set(prev_loc) | written),
-        "filters_files": files,
-    }
+    meta = {"filters": len(set(prev_loc) | written)}
     if prev_found == 0:
         # built from deltas 1..cycle -> covers every data-bearing bucket;
-        # ends Snapshot.filter_cycles here
+        # ends filter_files' walk here
         meta["filters_full"] = True
     return meta

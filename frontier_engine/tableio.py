@@ -16,12 +16,14 @@ data dirs are written first, then a manifest JSON is atomically renamed into
 
 The manifest is the only place the engine learns what is on disk (the
 Delta Lake log, VLDB 2020): manifest k lists, per table, the data files
-cycle k wrote (path relative to the table's cycle dir, rows, bytes), and
-the filter build adds its own files through ``commit_meta_update``. One
-``Snapshot`` of the parsed manifests answers every read's question —
-which files, written by which cycle — so no read lists a directory. The
-manifests are parsed once per ``TableIO`` and cached: a published
-manifest changes only through this instance's own ``commit_meta_update``.
+cycle k wrote (path relative to the table's cycle dir, rows, bytes). A
+table written after its cycle's commit (the filter build's ``filters``)
+goes through ``write_table`` and is recorded by ``commit_meta_update``
+in the same way. One ``Snapshot`` of the parsed manifests answers every
+read's question — which files, written by which cycle — so no read
+lists a directory. The manifests are parsed once per ``TableIO`` and
+cached: a published manifest changes only through this instance's own
+``commit_meta_update``.
 
 Single writer: one ``TableIO`` at a time owns its root. Opening one
 removes what a crash left behind — the ``_tmp/`` write dirs, unpublished
@@ -76,17 +78,14 @@ class Snapshot:
             default=None,
         )
 
-    def _entries(self, rel: str, cycle: int, entries: list) -> list:
-        d = os.path.join(self.root, rel)
-        return [DataFile(cycle, os.path.join(d, p), rows)
-                for p, rows, _bytes in entries]
-
     def files(self, name: str, cycle: int) -> list:
         """The data files table ``name`` committed at ``cycle``."""
         m = self.manifests.get(cycle)
         if m is None or name not in m["tables"]:
             return []
-        return self._entries(m["tables"][name], cycle, m["files"][name])
+        d = os.path.join(self.root, m["tables"][name])
+        return [DataFile(cycle, os.path.join(d, p), rows)
+                for p, rows, _bytes in m["files"][name]]
 
     def deltas(self, name: str, lo: int, hi: int) -> list:
         """Delta files of an append table committed in [lo, hi]."""
@@ -113,36 +112,6 @@ class Snapshot:
             start = max(since, base_cycle + 1)
         return base, self.deltas(name, start, self.cycle)
 
-    def filter_cycles(self) -> list:
-        """Cycles whose filter build is still consulted, newest first. A
-        "filters_full" build (its inserts covered every delta from cycle
-        1, or it consolidated) covered every data-bearing bucket, so it
-        ends the list."""
-        out = []
-        for c in sorted(self.manifests, reverse=True):
-            meta = self.manifests[c].get("meta", {})
-            if meta.get("filters") is None:
-                continue
-            out.append(c)
-            if meta.get("filters_full"):
-                break
-        return out
-
-    def filters(self) -> tuple:
-        """(newest build cycle or 0, {bucket -> its newest filter file}).
-        The map is the logical carry-forward: a bucket missing from newer
-        builds had no url_seen rows since its file's cycle, so that file
-        still covers it through the newest build."""
-        cycles = self.filter_cycles()
-        loc: dict = {}
-        for c in cycles:
-            for f in self._entries(
-                f"filters/cycle={c}", c,
-                self.manifests[c]["meta"]["filters_files"],
-            ):
-                loc.setdefault(bucket_of(f.path), f)
-        return (cycles[0] if cycles else 0), loc
-
 
 class TableIO:
     def __init__(self, root: str):
@@ -150,6 +119,7 @@ class TableIO:
         mdir = os.path.join(self.root, "_manifests")
         os.makedirs(mdir, exist_ok=True)
         self._manifests: dict = {}
+        self._staged: dict = {}  # cycle -> {table: (rel, files)} to publish
         for n in os.listdir(mdir):
             p = os.path.join(mdir, n)
             if n.endswith(".json"):
@@ -163,11 +133,8 @@ class TableIO:
         """Remove what no manifest names: the failed writes under
         ``_tmp/`` and every unnamed ``<table>/cycle=k`` dir (a crashed
         cycle's tables, a crashed filter build's rows)."""
-        named = set()
-        for c, m in self._manifests.items():
-            named.update(m["tables"].values())
-            if m.get("meta", {}).get("filters") is not None:
-                named.add(f"filters/cycle={c}")
+        named = {rel for m in self._manifests.values()
+                 for rel in m["tables"].values()}
         shutil.rmtree(os.path.join(self.root, "_tmp"), ignore_errors=True)
         os.makedirs(os.path.join(self.root, "_tmp"))
         for name in os.listdir(self.root):
@@ -197,8 +164,19 @@ class TableIO:
         )
 
     def _publish(self, cycle: int, entry: dict) -> dict:
-        """Atomically publish manifest ``cycle`` — the one place that
-        updates the manifest cache, and only once the rename is done."""
+        """Atomically publish manifest ``cycle`` with the tables staged
+        for it — the one place that updates the manifest cache, and only
+        once the rename is done."""
+        staged = self._staged.get(cycle, {})
+        if staged:
+            names = sorted(staged)
+            entry = {
+                **entry,
+                "tables": {**entry["tables"],
+                           **{n: staged[n][0] for n in names}},
+                "files": {**entry["files"],
+                          **{n: staged[n][1] for n in names}},
+            }
         path = self._manifest_path(cycle)
         tmp = f"{path}.tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -211,6 +189,7 @@ class TableIO:
             os.fsync(f.fileno())
         os.rename(tmp, path)
         self._manifests[cycle] = entry
+        self._staged.pop(cycle, None)
         return entry
 
     # ---- writes ----------------------------------------------------------
@@ -248,6 +227,15 @@ class TableIO:
                     ])
         return sorted(out)
 
+    def write_table(self, df, name: str, cycle: int, partition_by=None):
+        """Write table ``name`` of ``cycle`` and return its file entries;
+        the cycle's next publish (``commit`` or ``commit_meta_update``)
+        records the dir and the files in manifest k."""
+        rel = self._write_df(df, f"{name}/cycle={cycle}", partition_by)
+        files = self._written_files(rel)
+        self._staged.setdefault(cycle, {})[name] = (rel, files)
+        return files
+
     def commit(
         self,
         cycle: int,
@@ -274,35 +262,31 @@ class TableIO:
         cost attribution measured with no extra action."""
         from concurrent.futures import ThreadPoolExecutor
 
-        entry: dict = {"cycle": cycle, "parent": cycle - 1, "tables": {}}
-        files: dict = {}
+        entry: dict = {"cycle": cycle, "parent": cycle - 1,
+                       "tables": {}, "files": {}}
         write_secs: dict = {}
+        self._staged[cycle] = {}  # a retried commit starts afresh
 
         def write_one(item):
             name, (df, part) = item
-            rel = f"{name}/cycle={cycle}"
             t0 = time.time()
-            self._write_df(df, rel, part)
+            self.write_table(df, name, cycle, part)
             write_secs[name] = round(time.time() - t0, 2)
-            files[name] = self._written_files(rel)
-            return name, rel
 
         for name in warm:
             if name in tables:
-                n, rel = write_one((name, tables[name]))
-                entry["tables"][n] = rel
-        rest = {n: v for n, v in tables.items() if n not in entry["tables"]}
+                write_one((name, tables[name]))
+        rest = {n: v for n, v in tables.items() if n not in write_secs}
         if rest:
             with ThreadPoolExecutor(max_workers=len(rest)) as ex:
-                for name, rel in ex.map(write_one, rest.items()):
-                    entry["tables"][name] = rel
-        entry["files"] = {n: files[n] for n in entry["tables"]}
+                list(ex.map(write_one, rest.items()))
         if meta:
             entry["meta"] = meta
         return self._publish(cycle, entry), write_secs
 
     def commit_meta_update(self, cycle: int, meta_update: dict) -> dict:
-        """Merge keys into an existing manifest's meta (atomic rewrite)."""
+        """Merge keys into an existing manifest's meta and record the
+        tables staged for it since (atomic rewrite)."""
         m = self.manifest(cycle)
         assert m is not None, f"no manifest for cycle {cycle}"
         return self._publish(

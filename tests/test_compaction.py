@@ -116,6 +116,8 @@ def test_host_edges_and_nd_bands_compaction(
         "ann_index_base",
         # host graph handler
         "host_edges", "host_rank", "host_edges_base",
+        # the filter build, recorded by its meta update
+        "filters",
     } == set(m2["tables"])
     assert m2["meta"]["nd_mode"] == "full"
     assert m2["meta"]["ann_quantizer_cycle"] == 1

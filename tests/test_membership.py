@@ -7,6 +7,7 @@ import numpy as np
 from frontier_engine.membership import (
     BloomFilter,
     CuckooFilter,
+    filter_files,
     filter_from_row,
     load_bucket_filter,
 )
@@ -16,21 +17,22 @@ from frontier_engine.tableio import bucket_of
 def _locations(io, cycle):
     """(newest build cycle, {bucket -> cycle of its newest filter file})
     from the store's snapshot."""
-    last_build, loc = io.snapshot(cycle).filters()
+    last_build, loc = filter_files(io.snapshot(cycle))
     return last_build, {b: f.cycle for b, f in loc.items()}
 
 
 def _filter_at(io, cycle, bucket):
     """The bucket's filter row written by the build of ``cycle``."""
     return load_bucket_filter(next(
-        f.path for b, f in io.snapshot(cycle).filters()[1].items()
+        f.path for b, f in filter_files(io.snapshot(cycle))[1].items()
         if b == bucket and f.cycle == cycle
     ))
 
 
-def _buckets(meta):
-    """The buckets a filter build's meta update lists files for."""
-    return sorted(bucket_of(p) for p, _rows, _bytes in meta["filters_files"])
+def _buckets(io, cycle):
+    """The buckets the filter build of ``cycle`` wrote files for."""
+    return sorted(bucket_of(f.path)
+                  for f in io.snapshot(cycle).files("filters", cycle))
 
 
 def _hashes(n, seed=7):
@@ -185,7 +187,7 @@ def test_consolidation_rewrites_and_prunes(spark, tmp_path):
     )
     m2 = membership.rebuild_filters(spark, io, 2, cfg, consolidate=True)
     io.commit_meta_update(2, m2)
-    assert _buckets(m2) == [1, 2]  # carried bucket listed
+    assert _buckets(io, 2) == [1, 2]  # carried bucket listed
     assert m2["filters"] == 2
 
     # old dir pruned; everything resolves to cycle 2
@@ -248,7 +250,7 @@ def test_pruned_source_row_rebuilt_from_full_history(spark, tmp_path):
     )
     m3 = membership.rebuild_filters(spark, io, 3, cfg)
     io.commit_meta_update(3, m3)
-    assert _buckets(m3) == [1, 2]
+    assert _buckets(io, 3) == [1, 2]
     for b, seen in (
         (1, list(range(100)) + list(range(200, 250))),
         (2, list(range(500, 600)) + list(range(700, 750))),
@@ -286,7 +288,7 @@ def test_empty_delta_cycle_does_not_crash_rebuild(spark, tmp_path):
     io.commit(2, {"url_seen": (seen_df([], 2), ["host_bucket"])})
     m2 = membership.rebuild_filters(spark, io, 2, cfg)
     io.commit_meta_update(2, m2)
-    assert _buckets(m2) == []
+    assert _buckets(io, 2) == []
     assert m2["filters"] == 1  # bucket 1 still covered, carried logically
 
     last_build, loc = _locations(io, 2)
@@ -298,7 +300,7 @@ def test_empty_delta_cycle_does_not_crash_rebuild(spark, tmp_path):
     io.commit(3, {"url_seen": (seen_df([], 3), ["host_bucket"])})
     m3 = membership.rebuild_filters(spark, io, 3, cfg, consolidate=True)
     io.commit_meta_update(3, m3)
-    assert _buckets(m3) == [1]
+    assert _buckets(io, 3) == [1]
     g = _filter_at(io, 3, 1)
     assert g.contains_many(np.arange(100, dtype=np.uint64)).all()
 
@@ -332,7 +334,7 @@ def test_logical_carry_forward_no_copy(spark, tmp_path):
     )
     m1 = membership.rebuild_filters(spark, io, 1, cfg)
     io.commit_meta_update(1, m1)
-    assert _buckets(m1) == [1, 2]
+    assert _buckets(io, 1) == [1, 2]
 
     # cycle 2 touches only bucket 1
     io.commit(
@@ -341,7 +343,7 @@ def test_logical_carry_forward_no_copy(spark, tmp_path):
     )
     m2 = membership.rebuild_filters(spark, io, 2, cfg)
     io.commit_meta_update(2, m2)
-    assert _buckets(m2) == [1]
+    assert _buckets(io, 2) == [1]
     assert m2["filters"] == 2  # still covers both buckets
 
     last_build, loc = _locations(io, 2)
@@ -391,9 +393,12 @@ def test_from_scratch_build_is_full_and_ends_walk(spark, tmp_path):
     assert f.contains_many(both).all()  # cycle-1 rows covered too
 
     # an entry below the full build (bucket 3 at cycle 1) is not reached
-    io.commit_meta_update(1, {
-        "filters": 1, "filters_files": [["host_bucket=3/part-0.parquet", 1, 1]],
-    })
+    io.write_table(spark.createDataFrame(
+        [(3, "bloom", 64, "ok", bytes(8))],
+        membership._FILTER_ROW_SCHEMA_DDL,
+    ), "filters", 1, ["host_bucket"])
+    io.commit_meta_update(1, {"filters": 1})
+    assert _locations(io, 1) == (1, {3: 1})
     assert _locations(io, 2) == (2, {1: 2})
 def test_packed_filter_build_one_file_per_bucket(spark, tmp_path, monkeypatch):
     """More buckets than cores: the build (upserts and consolidation
