@@ -342,8 +342,12 @@ class TableIO:
         ``basePath`` at its own cycle dir: at the table root, the path's
         ``cycle`` would replace the rows' own ``cycle`` column (a base
         folds older cycles in). Every delta's rows carry its own cycle,
-        so the deltas share one scan at the table root, and the
-        discovered ``cycle`` is dropped where the schema has none."""
+        so the deltas share one scan at the table root; its columns are
+        put in the order a scan of one cycle dir gives (the schema's, with
+        the partition columns below the cycle dir last), and the
+        discovered ``cycle`` is dropped where the schema has none. A
+        frame's column order is the order an unpartitioned write of it
+        stores (``resolved_base``)."""
         scans = []
         if base:
             scans.append(self._scan(
@@ -352,9 +356,10 @@ class TableIO:
             ))
         if deltas:
             d = self._scan(spark, schema, deltas, os.path.join(self.root, name))
-            if "cycle" not in schema.fieldNames():
-                d = d.drop("cycle")
-            scans.append(d)
+            below = d.columns[d.columns.index("cycle") + 1:]
+            scans.append(d.select(
+                *(c for c in schema.fieldNames() if c not in below), *below
+            ))
         if not scans:
             return self._empty(spark, schema)
         return scans[0] if len(scans) == 1 else scans[0].unionByName(scans[1])
